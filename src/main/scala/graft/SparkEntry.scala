@@ -525,20 +525,20 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
 
-    // near-dup pairs -> CLUSTER ASSIGNMENT (connected components, min-label
-    // propagation): the keep/drop decision of a dedup pipeline. Exact-pair
-    // edges so the DuckDB recursive-CTE oracle reproduces the whole graph.
+    // near-dup pairs -> CLUSTER ASSIGNMENT (connected components): the
+    // keep/drop decision of a dedup pipeline. Exact-pair edges so the
+    // DuckDB recursive-CTE oracle reproduces the whole graph.
     "dedup_clusters" -> ((s, dir) => {
       val (pairs, nodes) = clusterPairGraph(s, dir)
       Dedup.connectedComponents(pairs, nodes).orderBy("doc_id")
     }),
 
-    // the SAME cluster assignment through the O(log n) large-star/small-star
-    // promotion path — both implementations are pinned to one DuckDB
-    // transitive-closure oracle
+    // the SAME cluster assignment forced onto the distributed large-star/
+    // small-star branch (the small-graph driver union-find is skipped) —
+    // both branches are pinned to one DuckDB transitive-closure oracle
     "dedup_clusters_ls" -> ((s, dir) => {
       val (pairs, nodes) = clusterPairGraph(s, dir)
-      Dedup.connectedComponentsAlternating(pairs, nodes).orderBy("doc_id")
+      Dedup.connectedComponents(pairs, nodes, smallGraphMax = 0).orderBy("doc_id")
     }),
 
     // cluster assignment -> QUALITY-AWARE keeper per component (highest
@@ -2364,7 +2364,7 @@ object SparkEntry {
         |  UNION
         |  SELECT e2.b, reach.r FROM reach JOIN e2 ON e2.a = reach.id)""".stripMargin
     // component = min transitively-reachable id; one oracle pins BOTH CC
-    // implementations (min-label + alternating)
+    // branches (driver union-find + large-star/small-star)
     val dedupClustersOracle =
       (clustersReachCte +
         " SELECT id AS doc_id, min(r) AS component FROM reach GROUP BY id ORDER BY doc_id")
@@ -2471,7 +2471,7 @@ object SparkEntry {
       // list comprehension rebuilds the exact k=3 word shingles
       // the same pair graph closed transitively (recursive CTE): component =
       // min reachable doc_id, isolated docs keep their own id. The SAME
-      // oracle pins both CC implementations (min-label + alternating).
+      // oracle pins both CC branches (union-find + large-star/small-star).
       "dedup_clusters" -> dedupClustersOracle,
       "dedup_clusters_ls" -> dedupClustersOracle,
       "dedup_keepers" -> dedupKeepersOracle,

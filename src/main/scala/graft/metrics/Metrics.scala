@@ -419,14 +419,6 @@ object Metrics {
       transform(overlaps, _ => lit("overlap")))
   }
 
-  /** G2 analyze — issue-kind counts ordered by (-count, kind)
-    * (`quality.py:168`), plus G9-style entity-type histogram.
-    */
-  def issueHistogram(df: DataFrame, textCol: String, entitiesCol: String): DataFrame =
-    df.select(explode(validateIssues(col(textCol), col(entitiesCol))).as("kind"))
-      .groupBy("kind").agg(count(lit(1)).as("cnt"))
-      .orderBy(desc("cnt"), asc("kind"))
-
   /** G8 — `aggregate_reports` (`deid_eval.py:307-337`) over a per-example
     * report table with integer facet columns. Extra aggregates (e.g. the
     * G4 similarity mean) fold into the SAME single-scan `.agg` — two

@@ -465,25 +465,33 @@ object Dedup {
     * near-dup evidence into the keep/drop decision a dedup pipeline
     * actually executes at corpus scale.
     *
-    * Algorithm: min-label propagation to fixpoint — each round every node
-    * takes the min label among itself and its neighbors (2 edge joins +
-    * 1 groupBy per round, all shuffles on the id key). Rounds needed =
-    * graph diameter; near-dup clusters are shallow (template families,
-    * mirror chains), so convergence is 2–4 rounds in practice. The loop
-    * exits early on convergence — note convergence is OBSERVED one round
-    * after propagation completes (a zero-change confirming round), so
-    * `maxIter` must be ≥ graph diameter + 1. If the cap is reached while
-    * labels are still changing the labels would NOT be a valid component
-    * assignment, so the call FAILS with an IllegalStateException telling
-    * the caller to raise `maxIter` or switch to the promotion path,
-    * [[connectedComponentsAlternating]] (large-star/small-star, Kiveris et
-    * al. SoCC 2014), which contracts chains in O(log n) rounds with the
-    * same join shapes.
+    * Two branches, picked by the input, emit the identical labeling:
+    *  - small graph, Long ids: a pair graph of at most `smallGraphMax`
+    *    edges (16 MB of id pairs at the default bound) union-finds on the
+    *    driver in one pass — one collect + one broadcast join. Probed with
+    *    `limit(n+1)` so an over-bound edge set is never fully collected;
+    *    Long ids only, so the union-by-min order equals Spark's min;
+    *  - everything else: large-star/small-star alternation (Kiveris et
+    *    al., "Connected Components in MapReduce and Beyond", SoCC 2014).
+    *    Chains contract in O(log n) rounds, not one round per hop.
     *
-    * One Spark action per round: the new labels carry their previous value
-    * (`prev`) through a lazily-marked `localCheckpoint`, and the
-    * changed-count over (label ≠ prev) is the action that materializes it
-    * — no separate convergence job re-joining old against new labels.
+    * Each distributed round is two edge rewrites, all shuffles keyed on
+    * node id:
+    *  - large-star: every node u computes m = min(Γ(u) ∪ u); each LARGER
+    *    neighbor v > u re-attaches as (v, m);
+    *  - small-star: with edges directed large→small, every u re-attaches
+    *    itself and its smaller neighbors to m = min(L(u) ∪ u).
+    * Edges stay directed large→small, and the fixpoint is a star forest:
+    * every non-root node carries exactly one edge (node, component-min).
+    * The loop stops as soon as the edge set IS a star forest — no node has
+    * two out-edges, and no edge points at a node that has one. Both
+    * rewrites preserve connectivity and every leaf points at a smaller
+    * root, so each star is one whole component rooted at its min. The
+    * test is exact, and its one aggregation is the single action that
+    * materializes each round's lazily-checkpointed edge set. An input that already is a star forest
+    * (e.g. disjoint duplicate pairs) runs zero rounds. If `maxIter` rounds
+    * do not reach it, the call FAILS with an IllegalStateException rather
+    * than return a truncated labeling.
     *
     * `edges` = (a, b) pairs (any near-dup query's output); `nodes` = the
     * full id set (isolated docs keep their own id as cluster).
@@ -492,21 +500,9 @@ object Dedup {
       edges: DataFrame,
       nodes: DataFrame,
       idCol: String = "doc_id",
-      maxIter: Int = 10,
+      maxIter: Int = 30,
       smallGraphMax: Long = 1L << 20
   ): DataFrame = {
-    import org.apache.spark.sql.functions.{col, least, min}
-    // r8 small-graph fast path (the domainCapExact smallGroupMax /
-    // IVF-centroid bounded-collect contract): a pair graph under
-    // `smallGraphMax` edges (16 MB of id pairs at the default bound)
-    // union-finds on the driver in one pass — one collect + one broadcast
-    // join replaces diameter+1 iterative join rounds (each a full
-    // AQE-staged job). Larger graphs take the distributed min-label loop
-    // below unchanged; both paths emit the identical min-reachable-id
-    // labeling. Long ids only (the union-by-min order must equal Spark's
-    // min semantics; non-integral id types fall through to the loop),
-    // probed with `limit(n+1)` so an over-bound edge set is never fully
-    // collected.
     val longIds = Seq(edges.schema("a").dataType, edges.schema("b").dataType,
       nodes.schema(idCol).dataType)
       .forall(_ == org.apache.spark.sql.types.LongType)
@@ -525,8 +521,7 @@ object Dedup {
       }
       edgeProbe.forEach { row =>
         val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
-        // union by MIN root: the surviving root is the min reachable id,
-        // exactly the min-label fixpoint
+        // union by MIN root: the surviving root is the min reachable id
         if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
       }
       val labelRows = parent.keys.toSeq.map(x =>
@@ -540,78 +535,11 @@ object Dedup {
       val labelDf = spark.createDataFrame(
         spark.sparkContext.parallelize(labelRows, 1), schema)
       return nodes
-        .join(org.apache.spark.sql.functions.broadcast(labelDf),
-          col(idCol) === col("id"), "left")
-        .select(col(idCol),
-          org.apache.spark.sql.functions.coalesce(col("lbl"), col(idCol))
-            .as("component"))
+        .join(broadcast(labelDf), col(idCol) === col("id"), "left")
+        .select(col(idCol), coalesce(col("lbl"), col(idCol)).as("component"))
     }
-    val sym = edges.select(col("a").as("src"), col("b").as("dst"))
-      .union(edges.select(col("b").as("src"), col("a").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // localCheckpoint per round: iterative plans otherwise nest one join
-    // tree per iteration (persist caches data but NOT the logical plan),
-    // which blows up planning/plan-printing at depth — lineage truncation
-    // is the standard move for iterative DataFrame algorithms. eager=false:
-    // the changed-count below is the action that materializes each round,
-    // so every round runs exactly one job.
-    var labels = nodes.select(col(idCol).as("id"), col(idCol).as("label"))
-      .localCheckpoint(false)
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val neighborMin = sym.join(labels, sym("dst") === labels("id"))
-        .select(col("src").as("id"), col("label"))
-        .groupBy("id").agg(min("label").as("nmin"))
-      val next = labels.join(neighborMin, Seq("id"), "left_outer")
-        .select(col("id"),
-          least(col("label"), org.apache.spark.sql.functions
-            .coalesce(col("nmin"), col("label"))).as("label"),
-          col("label").as("prev"))
-        .localCheckpoint(false)
-      val changed = next.where(col("label") =!= col("prev")).count()
-      labels = next.select("id", "label")
-      converged = changed == 0
-      iter += 1
-    }
-    sym.unpersist()
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge within maxIter=$maxIter rounds; " +
-        "labels would be truncated mid-propagation. Raise maxIter (rounds " +
-        "needed = graph diameter + 1 confirming zero-change round) or use " +
-        "connectedComponentsAlternating (O(log n) rounds) for chain-shaped graphs.")
-    labels.withColumnRenamed("id", idCol).withColumnRenamed("label", "component")
-  }
 
-  /** Connected components via large-star/small-star alternation (Kiveris
-    * et al., "Connected Components in MapReduce and Beyond", SoCC 2014) —
-    * the promotion path [[connectedComponents]]'s contract points at for
-    * graphs whose diameter exceeds a sane round budget: chains contract in
-    * O(log n) rounds instead of one round per hop.
-    *
-    * Each round is two edge rewrites, all shuffles keyed on node id:
-    *  - large-star: every node u computes m = min(Γ(u) ∪ u); each LARGER
-    *    neighbor v > u re-attaches as (v, m);
-    *  - small-star: with edges directed large→small, every u re-attaches
-    *    itself and its smaller neighbors to m = min(L(u) ∪ u).
-    * The fixpoint is a star forest — every non-root node carries one edge
-    * (node, component-min). Convergence is checked with a (count,
-    * hash-sum) signature computed in the same action that materializes the
-    * round's lazily-checkpointed edge set — one action per round, like
-    * [[connectedComponents]] — and then CONFIRMED with one exact multiset
-    * comparison at the (rare) signature match, so a hash-sum collision
-    * between different edge sets cannot silently terminate early. As with
-    * min-label, the fixpoint is observed one unchanged round after it is
-    * reached, so `maxIter` must cover the contraction rounds + 1.
-    */
-  def connectedComponentsAlternating(
-      edges: DataFrame,
-      nodes: DataFrame,
-      idCol: String = "doc_id",
-      maxIter: Int = 30
-  ): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col, greatest, least, min}
-
+    // emits (v, m) with m ≤ u < v: distinct and directed large→small
     def largeStar(e: DataFrame): DataFrame = {
       val sym = e.select(col("u"), col("v"))
         .union(e.select(col("v").as("u"), col("u").as("v")))
@@ -620,50 +548,45 @@ object Dedup {
       sym.where(col("v") > col("u"))
         .join(mins, "u")
         .select(col("v").as("u"), col("m").as("v"))
-        .where(col("u") =!= col("v"))
         .distinct()
     }
 
-    def smallStar(e: DataFrame): DataFrame = {
-      val dir = e.select(greatest(col("u"), col("v")).as("u"),
-          least(col("u"), col("v")).as("v"))
-        .where(col("u") =!= col("v")).distinct()
+    // takes largeStar's output as is: already distinct and large→small
+    def smallStar(dir: DataFrame): DataFrame = {
       val mins = dir.groupBy("u").agg(min("v").as("m")) // m < u by construction
-      val joined = dir.join(mins, "u")
-      joined.select(col("v").as("u"), col("m").as("v"))
+      dir.join(mins, "u")
+        .select(col("v").as("u"), col("m").as("v"))
         .union(mins.select(col("u"), col("m").as("v")))
         .where(col("u") =!= col("v"))
         .distinct()
     }
 
-    var e = edges.select(col("a").as("u"), col("b").as("v"))
+    // one aggregation over a single scan of e (a union of two scans would
+    // let two tasks race to compute the same lazily-checkpointed partition)
+    def isStarForest(e: DataFrame): Boolean =
+      e.select(explode(array(struct(col("u").as("n"), lit(1).as("out")),
+          struct(col("v").as("n"), lit(0).as("out")))).as("x"))
+        .groupBy(col("x.n")).agg(sum(col("x.out")).as("out"), count(lit(1)).as("deg"))
+        .where(col("out") > 1 || (col("out") === 1 && col("deg") > 1))
+        .isEmpty
+
+    // localCheckpoint per round: iterative plans otherwise nest one join
+    // tree per iteration, which blows up planning at depth. eager=false:
+    // isStarForest is the action that materializes each round, and the
+    // next round reads the checkpoint, not the caller's upstream
+    var e = edges.select(greatest(col("a"), col("b")).as("u"),
+        least(col("a"), col("b")).as("v"))
       .where(col("u") =!= col("v")).distinct()
       .localCheckpoint(false)
-    def signature(df: DataFrame): (Long, Long) = {
-      val r = df.selectExpr("count(*) AS n", "coalesce(sum(hash(u, v)), 0) AS h").first()
-      (r.getLong(0), r.getLong(1))
-    }
-    var sig = signature(e) // materializes the initial checkpoint
     var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val next = smallStar(largeStar(e)).localCheckpoint(false)
-      val nextSig = signature(next) // the one action of this round
-      // signature equality is necessary, not sufficient (hash-sum could
-      // collide) — confirm with an exact multiset compare, which runs only
-      // at the one round where the signatures first agree
-      converged = nextSig == sig && next.exceptAll(e).isEmpty
-      e = next
-      sig = nextSig
+    while (!isStarForest(e)) {
+      if (iter == maxIter) throw new IllegalStateException(
+        s"connectedComponents did not converge within maxIter=$maxIter " +
+          "rounds; rounds needed are O(log n) — raise maxIter.")
+      e = smallStar(largeStar(e)).localCheckpoint(false)
       iter += 1
     }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponentsAlternating did not converge within maxIter=$maxIter " +
-        "rounds; rounds needed are O(log n) — raise maxIter.")
-    // at fixpoint e is a star forest (one (node, root) edge per non-root);
-    // the min-agg guards row multiplicity anyway so a node can never fan out
     val stars = e.select(col("u").as("id"), col("v").as("comp"))
-      .groupBy("id").agg(min("comp").as("comp"))
     nodes.select(col(idCol).as("id"))
       .join(stars, Seq("id"), "left_outer")
       .select(col("id").as(idCol), coalesce(col("comp"), col("id")).as("component"))
@@ -671,10 +594,10 @@ object Dedup {
 
   /** Quality-aware keeper selection — the keep/drop decision real dedup
     * pipelines actually ship: given per-doc cluster assignments (the
-    * output of [[connectedComponents]] / [[connectedComponentsAlternating]])
-    * and a per-doc quality score ([[TextStats.qualityScore]]), keep the
-    * HIGHEST-quality document of each component (ties broken by smallest
-    * id) instead of the arbitrary min-id doc. Returns
+    * output of [[connectedComponents]]) and a per-doc quality score
+    * ([[TextStats.qualityScore]]), keep the HIGHEST-quality document of
+    * each component (ties broken by smallest id) instead of the arbitrary
+    * min-id doc. Returns
     * (idCol, component, keeper_id, is_dup).
     *
     * Scale shape: one LEFT join on the id key, then the [[keepersByKey]]

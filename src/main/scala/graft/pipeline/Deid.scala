@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.functions.gf
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The engine's flagship job: turns → redacted turns, designed for the
@@ -9,9 +9,8 @@ import org.apache.spark.sql.functions._
   *
   *  - the per-turn work is a single narrow projection (one custom expression
   *    per row) — embarrassingly parallel, no shuffle for compute;
-  *  - the ONLY shuffles are (a) output clustering (conv_id-salted so a
-  *    mega-conversation cannot pin one writer task) and (b) the metrics
-  *    aggregation;
+  *  - the ONLY shuffle is output clustering (conv_id-salted so a
+  *    mega-conversation cannot pin one writer task);
   *  - output rows are clustered and sorted `(conv_id, turn_idx)` within
   *    partitions for stable ordering (north rule O7);
   *  - resume-at-scale is handled by bucketed, lineage-tracked writes
@@ -57,20 +56,6 @@ object Deid {
         floor(col("turn_idx").cast("long") / saltBucket))
       .sortWithinPartitions(col("conv_id"), col("turn_idx"))
 
-  /** End-to-end: read → redact → cluster → write, with per-run metrics.
-    * Local/parquet layout; production swaps the writer for an Iceberg
-    * catalog table (one-line change, see README).
-    */
-  def run(
-      spark: SparkSession,
-      turns: DataFrame,
-      outPath: String,
-      mode: String = "replace"
-  ): Unit = {
-    val redacted = redact(turns, mode)
-    clusterForWrite(redacted).write.mode("overwrite").parquet(outPath)
-  }
-
   /** Per-type entity histogram over a redacted table (G9,
     * `quality.py:147-151,169`): counts per type ordered by (-count, type).
     */
@@ -80,22 +65,4 @@ object Deid {
       .groupBy(col("e.typ").as("typ"))
       .agg(count(lit(1)).as("cnt"))
       .orderBy(desc("cnt"), asc("typ"))
-
-  /** Per-partition metrics rows — the Spark analogue of the reference's
-    * `timings_ms`/artifacts (SURVEY §7.5). Cheap single groupBy.
-    */
-  def metrics(turns: DataFrame, redacted: DataFrame): DataFrame = {
-    val in = turns.select(
-      spark_partition_id().as("pid"),
-      length(col("text")).as("chars_in"))
-      .groupBy("pid")
-      .agg(count(lit(1)).as("turns"), sum("chars_in").as("chars_in"))
-    val out = redacted.select(
-      spark_partition_id().as("pid"),
-      length(col("text")).as("chars_out"),
-      size(col("entities")).as("n_entities"))
-      .groupBy("pid")
-      .agg(sum("chars_out").as("chars_out"), sum("n_entities").as("entities"))
-    in.join(out, Seq("pid"), "fullouter")
-  }
 }

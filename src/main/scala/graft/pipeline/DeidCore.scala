@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import graft.detect.{Detectors, RegexRules, Resolver}
-import graft.functions.Digests
 import graft.model.{DeidEvent, Entity, SpanEnt}
 import graft.redact.Redactor
 
@@ -40,14 +39,12 @@ object DeidCore {
       text: String,
       mode: String = "replace",
       lang: String = "zh",
-      withStub: Boolean = false,
-      contextHash: Option[String] = None
+      withStub: Boolean = false
   ): Result = {
     val resolved = detect(text, lang, withStub)
-    val ctx = contextHash.getOrElse(Digests.sha256Hex(text))
     val (clean, rawEvents) = Redactor.normalizeMode(mode) match {
       case "blackbox" => Redactor.blackboxMode(text, resolved)
-      case _          => Redactor.replaceMode(text, resolved, Some(ctx), isTw = true)
+      case _          => Redactor.replaceMode(text, resolved, isTw = true)
     }
     val (events, map) = Redactor.filterEvents(rawEvents)
     val entities = resolved.iterator.map { e =>

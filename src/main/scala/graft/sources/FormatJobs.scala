@@ -1,10 +1,7 @@
 package graft.sources
 
 import graft.extract.{Segments, XlsxExtract}
-import graft.functions.gf
 import graft.pipeline.DeidCore
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Format-preserving rebuild jobs (K2 CSV, S9/K XLSX): extract cell
   * segments → detect+replace on the concatenated text → anchor entities back
@@ -16,7 +13,7 @@ import org.apache.spark.sql.functions._
   * rebuilt file, replacements present, non-PII cells byte-identical.
   *
   * Per-document work is one pure function, so the distributed form is a
-  * single narrow projection ([[gf.csvDeid]]) — same scale shape as the
+  * single narrow projection ([[graft.functions.gf.csvDeid]]) — same scale shape as the
   * flagship turn pipeline.
   */
 object FormatJobs {
@@ -108,21 +105,4 @@ object FormatJobs {
         r.replacementMap.get(s"${e.typ}:${e.text}").map(e.text -> _)
       else None
     }
-
-  /** Distributed K2 job: a table of CSV documents → rewritten CSVs. One
-    * narrow projection; `outPath != null` also writes the table.
-    */
-  def csvRewriteJob(
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      csvCol: String = "csv",
-      mode: String = "replace",
-      outPath: String = null
-  ): DataFrame = {
-    val out = docs.select(col(idCol), gf.csvDeid(col(csvCol), mode).as("r"))
-      .select(col(idCol), col("r.csv").as("csv_deid"),
-        col("r.n_entities").as("n_entities"))
-    if (outPath != null) out.write.mode("overwrite").parquet(outPath)
-    out
-  }
 }

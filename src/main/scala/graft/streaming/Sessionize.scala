@@ -61,10 +61,4 @@ object Sessionize {
           }
       }
   }
-
-  /** Drain-style run for tests/backfills: availableNow over a parquet dir,
-    * results + still-open sessions summed per user equals the batch count.
-    */
-  def sessionCounts(closed: DataFrame): DataFrame =
-    closed.groupBy("user_id").agg(count(lit(1)).as("n_closed"))
 }

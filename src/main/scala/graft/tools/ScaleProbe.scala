@@ -57,7 +57,7 @@ object ScaleProbe {
       }
       val tCcLs = best3 {
         val pairs = Dedup.simhashNearDups(d, maxDist = 3).select("a", "b")
-        force(Dedup.connectedComponentsAlternating(pairs, d.select("doc_id")))
+        force(Dedup.connectedComponents(pairs, d.select("doc_id"), smallGraphMax = 0))
       }
       val tSub = best3 {
         val spans = Dedup.duplicatedWindowSpans(d, k = 8)

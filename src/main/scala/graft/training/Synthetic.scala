@@ -2,7 +2,6 @@ package graft.training
 
 import graft.functions.PyRandom
 import graft.model.Entity
-import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Deterministic synthetic span-example generator — bit-exact clone of
   * `/root/reference/src/deid_pipeline/training/synthetic.py:9-121`
@@ -72,18 +71,5 @@ object Synthetic {
 
       SpanExample(parts.toString, entities.result())
     }.toList
-  }
-
-  /** As a DataFrame (S11-shaped), for pipeline/eval jobs. */
-  def generateDf(
-      spark: SparkSession,
-      numExamples: Int = 100,
-      seed: Long = 0L,
-      language: String = "zh"
-  ): DataFrame = {
-    import spark.implicits._
-    generate(numExamples, seed, language)
-      .map(e => (e.text, e.entities))
-      .toDF("text", "entities")
   }
 }

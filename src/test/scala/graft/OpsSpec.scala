@@ -159,11 +159,13 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("connectedComponents fails loudly when maxIter < graph diameter") {
-    // chain 1-2-3-4-5-6: min-label needs 5 rounds to reach the far end
+    // chain 1-2-3-4-5-6 (diameter 5): two large-star/small-star rounds do not
+    // reach a star forest, so the call fails instead of returning a labeling
+    // truncated mid-contraction
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L)).toDF("a", "b")
     val nodes = (1L to 6L).toDF("doc_id")
     // smallGraphMax = 0 forces the distributed loop (a 5-edge graph would
-    // otherwise take the r8 driver union-find path, which has no rounds)
+    // otherwise take the driver union-find path, which has no rounds)
     val e = intercept[IllegalStateException] {
       Dedup.connectedComponents(chain, nodes, maxIter = 2, smallGraphMax = 0)
     }
@@ -174,10 +176,41 @@ class OpsSpec extends AnyFunSuite {
     assert(ok == Set(1L))
   }
 
+  test("alternating CC agrees with min-label propagation on a random graph") {
+    val rng = new scala.util.Random(42)
+    val n = 300L
+    val pairs = (1 to 220).map(_ =>
+      (rng.nextInt(n.toInt).toLong + 1, rng.nextInt(n.toInt).toLong + 1))
+      .filter(p => p._1 != p._2)
+    val edges = pairs.toDF("a", "b")
+    val nodes = (1L to n).toDF("doc_id")
+    def labelMap(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val alt = labelMap(Dedup.connectedComponents(edges, nodes, smallGraphMax = 0))
+    val driver = labelMap(Dedup.connectedComponents(edges, nodes))
+    // reference: plain min-label propagation to its fixpoint, on the driver
+    var ml = (1L to n).map(i => i -> i).toMap
+    var changed = true
+    while (changed) {
+      val next = pairs.foldLeft(ml) { case (m, (a, b)) =>
+        val lo = math.min(m(a), m(b))
+        m.updated(a, lo).updated(b, lo)
+      }
+      changed = next != ml
+      ml = next
+    }
+    assert(alt == ml)
+    assert(driver == ml)
+    // isolated nodes keep their own id
+    val isolated = (1L to n).filterNot(pairs.flatMap(p => Seq(p._1, p._2)).toSet)
+    assert(isolated.nonEmpty)
+    isolated.foreach(i => assert(alt(i) == i))
+  }
+
   test("connectedComponents small-graph driver path equals the distributed loop") {
-    // r8: graphs under smallGraphMax union-find on the driver; the labeling
-    // must be IDENTICAL to the distributed min-label fixpoint — chain,
-    // star, two components, isolated nodes, out-of-order edges
+    // graphs under smallGraphMax union-find on the driver; the labeling
+    // must be IDENTICAL to the distributed large-star/small-star fixpoint —
+    // chain, star, two components, isolated nodes, out-of-order edges
     val edges = Seq((5L, 6L), (2L, 1L), (3L, 2L), (9L, 8L), (4L, 3L))
       .toDF("a", "b")
     val nodes = (1L to 10L).toDF("doc_id")
@@ -188,30 +221,44 @@ class OpsSpec extends AnyFunSuite {
     assert(driver == dist, s"driver=$driver dist=$dist")
     assert(driver == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 5L,
       6L -> 5L, 7L -> 7L, 8L -> 8L, 9L -> 8L, 10L -> 10L), driver)
+
+    // String ids never take the driver path; labels are the byte-wise min
+    val strEdges = Seq(("b", "c"), ("c", "a"), ("y", "x"), ("x", "z"))
+      .toDF("a", "b")
+    val strNodes = Seq("a", "b", "c", "d", "x", "y", "z").toDF("doc_id")
+    val strLabels = Dedup.connectedComponents(strEdges, strNodes).collect()
+      .map(r => r.getAs[String]("doc_id") -> r.getAs[String]("component")).toMap
+    assert(strLabels == Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "d",
+      "x" -> "x", "y" -> "x", "z" -> "x"), strLabels)
   }
 
   test("connectedComponents runs ONE action per propagation round") {
-    // chain 1..6 needs 5 propagation rounds + 1 no-change round = 6 rounds;
-    // the changed-count action materializes each round's labels (lazy
-    // localCheckpoint), so actions == rounds — the old shape ran a separate
-    // convergence join-action per round (2 actions/round). Counted via a
+    // each round's lazily-checkpointed edge set is materialized by the
+    // star-forest test, so a run of R rounds fires R + 1 convergence
+    // actions: the test on the input edges, then one per round. R is found
+    // as the smallest maxIter that does not fail. Counted via a
     // QueryExecutionListener (job counts would include broadcast-build and
     // AQE stage jobs).
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L)).toDF("a", "b")
     val nodes = (1L to 6L).toDF("doc_id")
+    def cc(maxIter: Int) =
+      Dedup.connectedComponents(chain, nodes, maxIter = maxIter, smallGraphMax = 0)
+    val rounds = (0 to 8).find(m =>
+      scala.util.Try(cc(m)).isSuccess).getOrElse(fail("no convergence in 8 rounds"))
     val actions = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
         // lazy localCheckpoint also fires a callback without running a job;
-        // the job-running actions in this loop are exactly the count()s
-        if (funcName == "count") actions.incrementAndGet()
+        // the convergence action is the star-forest test's isEmpty
+        if (funcName == "isEmpty") actions.incrementAndGet()
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
     try {
-      Dedup.connectedComponents(chain, nodes, maxIter = 8, smallGraphMax = 0)
+      val labels = cc(rounds).collect().map(_.getAs[Long]("component")).toSet
+      assert(labels == Set(1L))
       // the listener bus is async: wait for the count to stabilize
       var last = -1
       var stable = 0
@@ -221,8 +268,8 @@ class OpsSpec extends AnyFunSuite {
         val now = actions.get()
         if (now == last) stable += 1 else { stable = 0; last = now }
       }
-      assert(last <= 7, s"$last actions for 6 rounds — extra convergence actions")
-      assert(last >= 6, s"$last actions: expected one per round")
+      assert(rounds > 0)
+      assert(last == rounds + 1, s"$last convergence actions for $rounds rounds")
     } finally spark.listenerManager.unregister(listener)
   }
 
@@ -483,33 +530,19 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("alternating CC: 200-node chain collapses in O(log n) rounds") {
-    // diameter 199: min-label would need 199 rounds (and throws at its
-    // default cap); the large-star/small-star promotion path converges fast
+    // diameter 199: one round per hop would need 199 rounds; large-star/
+    // small-star alternation converges in a handful
     val chain = (1L until 200L).map(i => (i, i + 1)).toDF("a", "b")
     val nodes = (1L to 200L).toDF("doc_id")
-    val got = Dedup.connectedComponentsAlternating(chain, nodes, maxIter = 15)
+    val got = Dedup.connectedComponents(chain, nodes, maxIter = 15, smallGraphMax = 0)
       .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("component")))
     assert(got.length == 200)
     assert(got.forall(_._2 == 1L), got.filter(_._2 != 1L).take(5).toSeq)
-  }
-
-  test("alternating CC agrees with min-label propagation on a random graph") {
-    val rng = new scala.util.Random(42)
-    val n = 300L
-    val edges = (1 to 220).map(_ =>
-      (rng.nextInt(n.toInt).toLong + 1, rng.nextInt(n.toInt).toLong + 1))
-      .filter(p => p._1 != p._2)
-      .toDF("a", "b")
-    val nodes = (1L to n).toDF("doc_id")
-    val alt = Dedup.connectedComponentsAlternating(edges, nodes)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val ml = Dedup.connectedComponents(edges, nodes, maxIter = 60)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(alt == ml)
-    // isolated nodes keep their own id
-    val isolated = (1L to n).filterNot(
-      edges.collect().flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet)
-    isolated.foreach(i => assert(alt(i) == i))
+    // an input that already is a star forest runs zero rounds
+    val star = (2L to 200L).map(i => (1L, i)).toDF("a", "b")
+    val starLabels = Dedup.connectedComponents(star, nodes, maxIter = 0, smallGraphMax = 0)
+      .collect().map(_.getAs[Long]("component")).toSet
+    assert(starLabels == Set(1L))
   }
 
   test("dedup/ANN library calls honor the documented eager-materialization contract") {
