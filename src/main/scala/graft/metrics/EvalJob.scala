@@ -1,5 +1,6 @@
 package graft.metrics
 
+import graft.plans.Materialize
 import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -72,17 +73,15 @@ object EvalJob {
       outDir: String,
       bannedPhrases: Seq[String] = Nil,
       maxExamples: Int = 0
-  ): DataFrame = {
-    val r = reports(spark, examplesPath, predictionsPath, bannedPhrases, maxExamples)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+  ): DataFrame =
+    Materialize.scoped(
+        reports(spark, examplesPath, predictionsPath, bannedPhrases, maxExamples)) { r =>
       r.write.mode("overwrite").json(s"$outDir/reports")
       val m = aggregate(r)
       m.coalesce(1).write.mode("overwrite").json(s"$outDir/metrics")
       // materialize the single metrics row so the caller's actions on the
-      // returned frame don't re-run the whole join after unpersist
+      // returned frame don't re-run the whole join after the scope ends
       spark.createDataFrame(
         spark.sparkContext.parallelize(m.collect().toIndexedSeq, 1), m.schema)
-    } finally r.unpersist()
-  }
+    }
 }

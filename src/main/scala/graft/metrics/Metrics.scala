@@ -2,6 +2,7 @@ package graft.metrics
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.Materialize
 
 /** Aggregations / metrics (SURVEY §2.6) with the reference's exact formulas.
   */
@@ -73,8 +74,8 @@ object Metrics {
     * [[summarizeNumbersApprox]] (sketch, not exact): counting bisection
     * over an integer value domain. Each rank is the smallest v with
     * `count(x <= v) >= k`, found by binary search — O(log(max−min))
-    * passes, each ONE partial-aggregated count over the (persisted)
-    * column, O(#quantiles) driver state, no sort, no heap: exact p99 of a
+    * passes, each ONE partial-aggregated count over the (call-scoped
+    * cached) column, O(#quantiles) driver state, no sort, no heap: exact p99 of a
     * 10¹²-row column in ≤ 64 cheap scans. All requested quantiles bisect
     * SIMULTANEOUSLY (one conditional-sum aggregate carries every
     * unconverged midpoint per pass), so the pass count does not grow with
@@ -104,44 +105,42 @@ object Metrics {
         org.apache.spark.sql.types.LongType, nullable = false) +:
         qs.map(q => org.apache.spark.sql.types.StructField(colName(q),
           org.apache.spark.sql.types.LongType, nullable = true)))
-    val base = df.select(col(valueCol).cast("long").as("v"))
-      .where(col("v").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.scoped(df.select(col(valueCol).cast("long").as("v"))
+        .where(col("v").isNotNull)) { base =>
       val head = base.agg(count(lit(1)), min(col("v")), max(col("v"))).collect()(0)
       val n = head.getLong(0)
-      if (n == 0L)
-        return spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            Seq(org.apache.spark.sql.Row.fromSeq(0L +: qs.map(_ => null))), 1),
-          schema)
-      val ks = qs.map(q => math.floor(q * (n - 1)).toLong + 1L)
-      // invariant per rank: answer ∈ [lo, hi]; converged when lo == hi
-      val lo = Array.fill(qs.size)(head.getLong(1))
-      val hi = Array.fill(qs.size)(head.getLong(2))
-      var passes = 0
-      while (lo.indices.exists(i => lo(i) < hi(i))) {
-        passes += 1
-        require(passes <= 70, s"bisection failed to converge in $passes passes")
-        val open = lo.indices.filter(i => lo(i) < hi(i))
-        // midpoint that can't overflow and always moves: lo + (hi-lo)/2
-        val mids = open.map(i => lo(i) + (hi(i) - lo(i)) / 2)
-        val counts = base.agg(
-            sum(when(col("v") <= mids.head, 1L).otherwise(0L)),
-            open.tail.zipWithIndex.map { case (_, j) =>
-              sum(when(col("v") <= mids(j + 1), 1L).otherwise(0L))
-            }: _*)
-          .collect()(0)
-        open.zipWithIndex.foreach { case (i, j) =>
-          if (counts.getLong(j) >= ks(i)) hi(i) = mids(j)
-          else lo(i) = mids(j) + 1
+      val values: Seq[Any] =
+        if (n == 0L) qs.map(_ => null)
+        else {
+          val ks = qs.map(q => math.floor(q * (n - 1)).toLong + 1L)
+          // invariant per rank: answer ∈ [lo, hi]; converged when lo == hi
+          val lo = Array.fill(qs.size)(head.getLong(1))
+          val hi = Array.fill(qs.size)(head.getLong(2))
+          var passes = 0
+          while (lo.indices.exists(i => lo(i) < hi(i))) {
+            passes += 1
+            require(passes <= 70, s"bisection failed to converge in $passes passes")
+            val open = lo.indices.filter(i => lo(i) < hi(i))
+            // midpoint that can't overflow and always moves: lo + (hi-lo)/2
+            val mids = open.map(i => lo(i) + (hi(i) - lo(i)) / 2)
+            val counts = base.agg(
+                sum(when(col("v") <= mids.head, 1L).otherwise(0L)),
+                open.tail.zipWithIndex.map { case (_, j) =>
+                  sum(when(col("v") <= mids(j + 1), 1L).otherwise(0L))
+                }: _*)
+              .collect()(0)
+            open.zipWithIndex.foreach { case (i, j) =>
+              if (counts.getLong(j) >= ks(i)) hi(i) = mids(j)
+              else lo(i) = mids(j) + 1
+            }
+          }
+          lo.toSeq
         }
-      }
       spark.createDataFrame(
         spark.sparkContext.parallelize(
-          Seq(org.apache.spark.sql.Row.fromSeq(n +: lo.toSeq)), 1),
+          Seq(org.apache.spark.sql.Row.fromSeq(n +: values)), 1),
         schema)
-    } finally base.unpersist()
+    }
   }
 
   /** Grouped [[exactQuantilesBisect]]: exact per-group order statistics
@@ -172,11 +171,9 @@ object Metrics {
       val pm = math.round(q * 1000)
       if (pm % 10 == 0) s"p${pm / 10}" else s"p${pm / 10}_${pm % 10}"
     }
-    val base = df.select(col(groupCol).cast("string").as("g"),
+    Materialize.scoped(df.select(col(groupCol).cast("string").as("g"),
         col(valueCol).cast("long").as("v"))
-      .where(col("v").isNotNull && col("g").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+        .where(col("v").isNotNull && col("g").isNotNull)) { base =>
       val heads = base.groupBy("g")
         .agg(count(lit(1)).as("n"), min("v").as("lo"), max("v").as("hi"))
         .limit(maxGroups + 1).collect()
@@ -240,7 +237,7 @@ object Metrics {
         org.apache.spark.sql.Row.fromSeq(g +: sts.head.n +: sts.map(_.lo).toSeq)
       }
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-    } finally base.unpersist()
+    }
   }
 
   /** Exact per-group k-th smallest of an integer column — the RANK twin of
@@ -261,11 +258,9 @@ object Metrics {
       maxGroups: Int = 100000
   ): DataFrame = {
     val spark = df.sparkSession
-    val base = df.select(col(groupCol).cast("string").as("g"),
+    Materialize.scoped(df.select(col(groupCol).cast("string").as("g"),
         col(valueCol).cast("long").as("v"))
-      .where(col("v").isNotNull && col("g").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+        .where(col("v").isNotNull && col("g").isNotNull)) { base =>
       val heads = base.groupBy("g")
         .agg(count(lit(1)).as("n"), min("v").as("lo"), max("v").as("hi"))
         .limit(maxGroups + 1).collect()
@@ -313,7 +308,7 @@ object Metrics {
       val rows = states.toSeq.map(s =>
         org.apache.spark.sql.Row(s.g, s.n, s.lo))
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-    } finally base.unpersist()
+    }
   }
 
   /** G5 — `TYPE_PATTERNS` (`training/deid_eval.py:99-112`), as Spark regex

@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * `(text: string, entities: array<struct<typ,start,end,text>>)`.
   *
   * The reference builds one dict in one pass; at scale this is four small
-  * aggregations over the same cached projection (counts, issue-kind
-  * histogram, type histogram, G1 summaries on three measures). Output: one
-  * summary row + two histogram frames ordered by (-count, key)
+  * aggregations over the same lazily checkpointed projection (counts,
+  * issue-kind histogram, type histogram, G1 summaries on three measures).
+  * Output: one summary row + two histogram frames ordered by (-count, key)
   * (`quality.py:168-169`).
   */
 object QualityReport {
@@ -31,7 +31,7 @@ object QualityReport {
       .withColumn("issues", validateIssues(col("text"), col("entities")))
       .withColumn("n_text", n)
       .withColumn("n_ents", size(col("entities")))
-      .cache()
+      .localCheckpoint(false)
 
     // invalid entity = no span / out-of-bounds / empty (quality.py:147-159)
     val invalidEnt = size(filter(col("entities"), e =>

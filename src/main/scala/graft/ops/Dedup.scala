@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.Materialize
 
 /** Deduplication operators for large-scale text corpora.
   *
@@ -44,14 +45,13 @@ object Dedup {
     * differ only in the class-key expression.
     */
   private[ops] def keepersByKey(docs: DataFrame, idCol: String, key: Column): DataFrame = {
-    // r8: lazy persist — the keyed frame feeds the class aggregation AND
-    // the probe side of the join-back. When the one-row-per-class build
-    // side broadcasts (the common plan), the probe side carries no
-    // exchange, so without the cache the class-key chain (sha2 digest /
-    // multiset key / URL canonicalization) re-evaluated per consumer.
-    // Narrow (id, key) rows only; callers release via catalog.clearCache.
-    val keyed = docs.select(col(idCol), key.as("dup_key"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // r8: the keyed frame feeds the class aggregation AND the probe side
+    // of the join-back. When the one-row-per-class build side broadcasts
+    // (the common plan), the probe side carries no exchange, so without a
+    // shared materialization the class-key chain (sha2 digest / multiset
+    // key / URL canonicalization) re-evaluated per consumer. Lazy local
+    // checkpoint of narrow (id, key) rows: it lives inside the returned plan.
+    val keyed = docs.select(col(idCol), key.as("dup_key")).localCheckpoint(false)
     val classes = keyed.groupBy(col("dup_key"))
       .agg(min(col(idCol)).as("keeper_id"))
       .withColumnRenamed("dup_key", "class_key")
@@ -157,27 +157,26 @@ object Dedup {
   }
 
   /** Shared hot-key guard for the pair-emitting paths: if any key of
-    * `keyed` occurs more than `maxFreq` times, release `cleanup` and throw
-    * with the caller's message (built from a `k=v, …` description of the
-    * hot key and its frequency). For a true m-member duplicate class the
+    * `keyed` occurs more than `maxFreq` times, throw with the caller's
+    * message (built from a `k=v, …` description of the hot key and its
+    * frequency). For a true m-member duplicate class the
     * PAIR output is itself Θ(m²), so no pair-emitting scheme can do better
     * than refuse and point at the linear keeper form — the
     * `ngramJaccardCounts` maxDocFreq discipline, shared by all three
-    * callers. One cheap aggregation over the (already persisted) narrow
-    * keyed frame; lookups by field NAME so a schema tweak fails loudly
-    * instead of silently reading the wrong ordinal.
+    * callers. One cheap aggregation over the (scoped-cached) narrow keyed
+    * frame, whose scope releases it when this throws; lookups by field
+    * NAME so a schema tweak fails loudly instead of silently reading the
+    * wrong ordinal.
     */
   private def guardHotKey(
       keyed: DataFrame,
       keyCols: Seq[String],
-      maxFreq: Int,
-      cleanup: () => Unit)(
+      maxFreq: Int)(
       msg: (String, Long) => String): Unit =
     if (maxFreq > 0) {
       val hot = keyed.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("freq"))
         .where(col("freq") > maxFreq).limit(1).collect()
       if (hot.nonEmpty) {
-        cleanup()
         val row = hot.head
         val keyDesc = keyCols.map(c => s"$c=${row.getAs[Any](c)}").mkString(", ")
         throw new IllegalStateException(msg(keyDesc, row.getAs[Long]("freq")))
@@ -283,18 +282,18 @@ object Dedup {
   /** Candidate pairs from LSH buckets, verified with exact shingle Jaccard.
     * Returns (a, b, jaccard) with a < b and jaccard >= threshold.
     *
-    * Scale shape: the narrow (id, band, band_hash) frame is persisted so the
-    * self-join computes signatures ONCE; the shuffle key is (band, band_hash)
-    * only. Verification re-reads shingles only for docs that appear in a
-    * candidate pair (left-semi prune) — at production scale candidates ≪
-    * corpus, so the second text scan touches a small fraction of the data.
+    * Scale shape: the narrow (id, band, band_hash) frame is cached for the
+    * call so the bucket aggregations compute signatures ONCE; the shuffle
+    * key is (band, band_hash) only. Verification re-reads shingles only for
+    * docs that appear in a candidate pair (left-semi prune) — at
+    * production scale candidates ≪ corpus, so the second text scan touches
+    * a small fraction of the data.
     *
-    * Eager-materialization contract: this call is an ACTION, not lazy plan
-    * construction — the verified-pair result is persisted (MEMORY_AND_DISK)
-    * and materialized before returning so the band/candidate/shingle caches
-    * can be released here instead of accumulating across invocations. The
-    * caller owns the returned frame's cache: `unpersist()` it when done.
-    * To compose lazily, build from [[minhashBands]] + your own join.
+    * Eager contract: this call is an ACTION, not lazy plan construction —
+    * the verified-pair result comes back as a materialized local
+    * checkpoint, and every intermediate cache is released before the call
+    * returns or throws ([[graft.plans.Materialize]]). To compose lazily,
+    * build from [[minhashBands]] + your own join.
     */
   def minhashNearDups(
       docs: DataFrame,
@@ -304,7 +303,7 @@ object Dedup {
       bands: Int = 16,
       threshold: Double = 0.7,
       maxBucketFreq: Int = 1000
-  ): DataFrame = {
+  ): DataFrame =
     // r8: cache the banded frame ALREADY hash-partitioned on the bucket
     // key — the guard aggregation and the bucket-pair aggregation then
     // both run exchange-free on the cached partitioning (one shuffle paid
@@ -313,59 +312,52 @@ object Dedup {
     // constant. A guard-worthy mega-bucket makes its partition a spilled
     // straggler during the cache build, but MEMORY_AND_DISK streams it and
     // the guard still refuses loudly right after.
-    val b = minhashBands(docs, idCol, textCol, numHashes, bands)
-      .repartition(bucketParts(docs), col("band"), col("band_hash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Hot-bucket guard (the ngramJaccardCounts maxDocFreq discipline applied
-    // to LSH buckets): one (band, band_hash) bucket holding m docs produces
-    // O(m²) candidate rows BEFORE verification can prune — at corpus scale a
-    // million-member exact-duplicate class (empty docs, boilerplate) lands in
-    // one bucket of EVERY band. Pair output for such a class is itself
-    // quadratic, so no pair-emitting scheme can do better than refuse: fail
-    // loudly and point at the linear keeper forms ([[shingleSetKeepers]] for
-    // the threshold-1.0 regime) instead of silently running an m² join.
-    guardHotKey(b, Seq("band", "band_hash"), maxBucketFreq, () => b.unpersist()) {
-      (key, freq) =>
+    Materialize.scoped(minhashBands(docs, idCol, textCol, numHashes, bands)
+        .repartition(bucketParts(docs), col("band"), col("band_hash"))) { b =>
+      // Hot-bucket guard (the ngramJaccardCounts maxDocFreq discipline
+      // applied to LSH buckets): one (band, band_hash) bucket holding m docs
+      // produces O(m²) candidate rows BEFORE verification can prune — at
+      // corpus scale a million-member exact-duplicate class (empty docs,
+      // boilerplate) lands in one bucket of EVERY band. Pair output for such
+      // a class is itself quadratic, so no pair-emitting scheme can do
+      // better than refuse: fail loudly and point at the linear keeper forms
+      // ([[shingleSetKeepers]] for the threshold-1.0 regime) instead of
+      // silently running an m² join.
+      guardHotKey(b, Seq("band", "band_hash"), maxBucketFreq) { (key, freq) =>
         s"minhashNearDups: LSH bucket ($key) holds $freq docs > " +
           s"maxBucketFreq=$maxBucketFreq — a duplicate class this size has " +
           "quadratic pair output. Use the linear keeper form " +
           "(Dedup.shingleSetKeepers / multisetKeepers) for exact-regime " +
           "classes, or raise maxBucketFreq deliberately."
+      }
+      // r8: candidates via [[bucketPairs]] — one aggregation shuffle of the
+      // banded frame replaces the two-sided bucket self-join, and singleton
+      // buckets are pruned before pair enumeration. Both multi-consumer
+      // frames (candidates feeds the id-prune AND the verify join; sh feeds
+      // both verify sides) are materialized EAGERLY: lazy persists raced
+      // under AQE's concurrent stage submission — the profiled plan re-ran
+      // the shingle chain 3× before any cache block landed.
+      Materialize.scoped(bucketPairs(b, Seq("band", "band_hash"), idCol)
+          .distinct()) { candidates =>
+        candidates.count()
+        // one explode over the cached pair frame instead of a two-branch
+        // union — the pair cache is scanned once
+        val candidateIds = candidates
+          .select(explode(array(col("a"), col("b"))).as(idCol))
+          .distinct()
+        Materialize.scoped(docs.join(candidateIds, Seq(idCol), "left_semi")
+            .select(col(idCol), shingles(col(textCol)).as("sh"))) { sh =>
+          sh.count()
+          candidates
+            .join(sh.withColumnRenamed(idCol, "a").withColumnRenamed("sh", "sh_a"), "a")
+            .join(sh.withColumnRenamed(idCol, "b").withColumnRenamed("sh", "sh_b"), "b")
+            .withColumn("jaccard", jaccardArrays(col("sh_a"), col("sh_b")))
+            .where(col("jaccard") >= threshold)
+            .select("a", "b", "jaccard")
+            .localCheckpoint()
+        }
+      }
     }
-    // r8: candidates via [[bucketPairs]] — one aggregation shuffle of the
-    // banded frame replaces the two-sided bucket self-join, and singleton
-    // buckets are pruned before pair enumeration. Both multi-consumer
-    // frames (candidates feeds the id-prune AND the verify join; sh feeds
-    // both verify sides) are materialized EAGERLY: lazy persists raced
-    // under AQE's concurrent stage submission — the profiled plan re-ran
-    // the shingle chain 3× before any cache block landed.
-    val candidates = bucketPairs(b, Seq("band", "band_hash"), idCol)
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    candidates.count()
-    // one explode over the cached pair frame instead of a two-branch
-    // union — the pair cache is scanned once
-    val candidateIds = candidates
-      .select(explode(array(col("a"), col("b"))).as(idCol))
-      .distinct()
-    val sh = docs.join(candidateIds, Seq(idCol), "left_semi")
-      .select(col(idCol), shingles(col(textCol)).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sh.count()
-    val result = candidates
-      .join(sh.withColumnRenamed(idCol, "a").withColumnRenamed("sh", "sh_a"), "a")
-      .join(sh.withColumnRenamed(idCol, "b").withColumnRenamed("sh", "sh_b"), "b")
-      .withColumn("jaccard", jaccardArrays(col("sh_a"), col("sh_b")))
-      .where(col("jaccard") >= threshold)
-      .select("a", "b", "jaccard")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize, then release the intermediates — repeated invocations in a
-    // long-lived session would otherwise accumulate cached band/shingle blocks.
-    // The (small) verified-pair result is the only frame the caller owns.
-    result.count()
-    b.unpersist(); candidates.unpersist(); sh.unpersist()
-    result
-  }
 
   /** Exact Jaccard over two string arrays (distinct semantics). */
   def jaccardArrays(a: Column, b: Column): Column = {
@@ -666,12 +658,10 @@ object Dedup {
     * Returns (idCol, tok_start, tok_end, start, end): token-index span
     * [tok_start, tok_end) plus the code-point char span [start, end).
     *
-    * Eager-materialization contract: same as [[minhashNearDups]] — the
-    * window frame feeds BOTH the count-distinct aggregation and the
-    * join-back probe, so it is persisted (the tokenize+sha2 scan runs
-    * once, not twice), the result is materialized, the window cache is
-    * released before returning, and the caller owns the returned frame's
-    * `unpersist()`.
+    * Eager contract: same as [[minhashNearDups]] — the window frame feeds
+    * BOTH the count-distinct aggregation and the join-back probe, so it is
+    * cached for the call (the tokenize+sha2 scan runs once, not twice) and
+    * the result comes back as a materialized local checkpoint.
     */
   def duplicatedWindowSpans(
       docs: DataFrame,
@@ -682,19 +672,16 @@ object Dedup {
   ): DataFrame = {
     require(k >= 1, "window size k must be >= 1")
     require(minDocs >= 2, "a window is duplicated only across >= 2 documents")
-    val wins = tokenWindows(docs, idCol, textCol, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dup = wins.groupBy("w")
-      .agg(countDistinct("id").as("nd"))
-      .where(col("nd") >= minDocs)
-      .select("w")
-    val result = wins.join(dup, "w")
-      .select(col("id").as(idCol), col("tok_start"), col("tok_end"),
-        col("start"), col("end"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    wins.unpersist()
-    result
+    Materialize.scoped(tokenWindows(docs, idCol, textCol, k)) { wins =>
+      val dup = wins.groupBy("w")
+        .agg(countDistinct("id").as("nd"))
+        .where(col("nd") >= minDocs)
+        .select("w")
+      wins.join(dup, "w")
+        .select(col("id").as(idCol), col("tok_start"), col("tok_end"),
+          col("start"), col("end"))
+        .localCheckpoint()
+    }
   }
 
   /** (id, tok_start, tok_end, start, end, w): every k-token window of every
@@ -807,9 +794,8 @@ object Dedup {
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     val numBits = org.apache.spark.util.sketch.BloomFilter
       .optimalNumOfBits(expectedRefWindows, fpp)
-    val refW = tokenWindows(reference, idCol, textCol, k).select("w").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.scoped(
+        tokenWindows(reference, idCol, textCol, k).select("w").distinct()) { refW =>
       val bloomAgg = Bridge.column(new BloomFilterAggregate(
         Bridge.expression(xxhash64(col("w"))),
         Bridge.expression(lit(expectedRefWindows)),
@@ -822,18 +808,14 @@ object Dedup {
       // exact verify (false-positive kill): probe side = bloom survivors
       // only; shuffle_hash because Catalyst's estimate of the distinct
       // aggregate cannot see the true build size the caller just declared
-      // broadcast-hostile. Eager-materialization contract as
-      // [[minhashNearDups]]: refW feeds both the bloom aggregation and
-      // this join, so the result is persisted + materialized, the
-      // reference cache released, and the caller owns the returned
-      // frame's unpersist().
-      val result = cand.join(refW.hint("shuffle_hash"), Seq("w"), "left_semi")
+      // broadcast-hostile. Eager contract as [[minhashNearDups]]: refW
+      // feeds both the bloom aggregation and this join, so it is cached
+      // for the call and the result comes back checkpointed.
+      cand.join(refW.hint("shuffle_hash"), Seq("w"), "left_semi")
         .select(col("id").as(idCol), col("tok_start"), col("tok_end"),
           col("start"), col("end"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      result.count()
-      result
-    } finally refW.unpersist()
+        .localCheckpoint()
+    }
   }
 
   /** Doc-level contamination REPORT — the audit twin of
@@ -974,67 +956,62 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text",
       maxSigFreq: Int = 1000
-  ): DataFrame = {
+  ): DataFrame =
     // at distance 0 the pigeonhole machinery reduces to ONE equality join
     // on the full 64-bit signature — built directly here so the signature
-    // scan runs once (persisted narrow (id, sig) frame) instead of the
+    // scan runs once (cached narrow (id, sig) frame) instead of the
     // general-banded plan, whose lazy composition replicated the signature
     // expression ~30× across the join/filter tree (plan-compile bloat +
     // repeated corpus scans at scale).
     //
-    // Eager-materialization contract: same as [[minhashNearDups]] — the
-    // call is an action; the returned verified-pair frame is persisted and
-    // materialized, all intermediates released; caller owns `unpersist()`.
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    // Eager contract: same as [[minhashNearDups]] — the call is an action;
+    // the verified pairs come back checkpointed, intermediates released.
     // r8: cached pre-partitioned on the signature — guard agg and the
     // bucket-pair agg both run exchange-free (see minhashNearDups note)
-    val sigs = docs
-      .select(col(idCol).as("id"), graft.functions.gf.simhash64(col(textCol)).as("sig"))
-      .repartition(bucketParts(docs), col("sig"))
-      .persist(lvl)
-    // Hot-signature guard: a corpus where m docs collapse to one signature
-    // (empty/near-empty texts at real-corpus scale) makes this equality
-    // self-join emit O(m²) rows BEFORE the verify step can prune.
-    guardHotKey(sigs, Seq("sig"), maxSigFreq, () => sigs.unpersist()) {
-      (key, freq) =>
+    Materialize.scoped(docs
+        .select(col(idCol).as("id"), graft.functions.gf.simhash64(col(textCol)).as("sig"))
+        .repartition(bucketParts(docs), col("sig"))) { sigs =>
+      // Hot-signature guard: a corpus where m docs collapse to one
+      // signature (empty/near-empty texts at real-corpus scale) makes this
+      // equality self-join emit O(m²) rows BEFORE the verify step can prune.
+      guardHotKey(sigs, Seq("sig"), maxSigFreq) { (key, freq) =>
         s"simhashExactDups: signature ($key) is shared by $freq docs > " +
           s"maxSigFreq=$maxSigFreq — pair output for a class this size is " +
           "quadratic. Use the linear keeper form (Dedup.multisetKeepers) " +
           "for exact-duplicate classes, or raise maxSigFreq deliberately."
+      }
+      // r8: candidates via [[bucketPairs]] (one aggregation shuffle keyed
+      // on the signature; singleton signatures — nearly every doc — pruned
+      // before pair enumeration; no distinct needed: one bucket per id, so
+      // a pair is emitted exactly once, as in the old l<r self-join). cand
+      // and keys are both materialized EAGERLY: each feeds two downstream
+      // join branches, and lazy persists raced under AQE's concurrent stage
+      // submission — the profiled plan re-ran the semi-join + multiset-key
+      // chain up to 6× before any cache block landed.
+      Materialize.scoped(bucketPairs(sigs, Seq("sig"), "id")) { cand =>
+        cand.count()
+        val candidateIds = cand
+          .select(explode(array(col("a"), col("b"))).as(idCol))
+          .distinct()
+        // the token-multiset key via [[graft.functions.TokenMultisetKeyExpr]]
+        // — the SAME Locale.ROOT lowering the signature uses, so "equal key
+        // ⇒ equal signature" holds for all text (Spark's lower() would fall
+        // back to default-locale String.toLowerCase on non-ASCII, a latent
+        // sig/key divergence). Recomputed only for docs in a candidate pair
+        // (left-semi prune).
+        Materialize.scoped(docs.join(candidateIds, Seq(idCol), "left_semi")
+            .select(col(idCol),
+              graft.functions.gf.tokenMultisetKey(col(textCol)).as("key"))) { keys =>
+          keys.count()
+          cand
+            .join(keys.withColumnRenamed(idCol, "a").withColumnRenamed("key", "key_a"), "a")
+            .join(keys.withColumnRenamed(idCol, "b").withColumnRenamed("key", "key_b"), "b")
+            .where(col("key_a") === col("key_b"))
+            .select("a", "b")
+            .localCheckpoint()
+        }
+      }
     }
-    // r8: candidates via [[bucketPairs]] (one aggregation shuffle keyed on
-    // the signature; singleton signatures — nearly every doc — pruned
-    // before pair enumeration; no distinct needed: one bucket per id, so a
-    // pair is emitted exactly once, as in the old l<r self-join). cand and
-    // keys are both materialized EAGERLY: each feeds two downstream join
-    // branches, and lazy persists raced under AQE's concurrent stage
-    // submission — the profiled plan re-ran the semi-join + multiset-key
-    // chain up to 6× before any cache block landed.
-    val cand = bucketPairs(sigs, Seq("sig"), "id").persist(lvl)
-    cand.count()
-    val candidateIds = cand
-      .select(explode(array(col("a"), col("b"))).as(idCol))
-      .distinct()
-    // the token-multiset key via [[graft.functions.TokenMultisetKeyExpr]] —
-    // the SAME Locale.ROOT lowering the signature uses, so "equal key ⇒
-    // equal signature" holds for all text (Spark's lower() would fall back
-    // to default-locale String.toLowerCase on non-ASCII, a latent sig/key
-    // divergence). Recomputed only for docs in a candidate pair (left-semi
-    // prune).
-    val keys = docs.join(candidateIds, Seq(idCol), "left_semi")
-      .select(col(idCol), graft.functions.gf.tokenMultisetKey(col(textCol)).as("key"))
-      .persist(lvl)
-    keys.count()
-    val result = cand
-      .join(keys.withColumnRenamed(idCol, "a").withColumnRenamed("key", "key_a"), "a")
-      .join(keys.withColumnRenamed(idCol, "b").withColumnRenamed("key", "key_b"), "b")
-      .where(col("key_a") === col("key_b"))
-      .select("a", "b")
-      .persist(lvl)
-    result.count()
-    sigs.unpersist(); cand.unpersist(); keys.unpersist()
-    result
-  }
 
   /** Conversation-level duplicate pairs over a TURNS table — MinHash-LSH
     * banding over each conversation's per-turn fingerprint set, candidates
@@ -1062,10 +1039,9 @@ object Dedup {
     *
     * Returns verified (a, b) pairs, a < b. Shuffles: one turn→conversation
     * aggregation keyed on `convCol`, one band-keyed candidate join over
-    * narrow (id, band, hash) rows, one id-keyed verify join. Same
-    * eager-materialization contract as [[minhashNearDups]] (result
-    * persisted + materialized; caller owns `unpersist()`); same hot-bucket
-    * guard (the linear alternative for exact classes is the
+    * narrow (id, band, hash) rows, one id-keyed verify join. Same eager
+    * contract as [[minhashNearDups]] (result checkpointed, intermediates
+    * released); same hot-bucket guard (the linear alternative for exact classes is the
     * `multisetFingerprint` window — `conv_dedup_fp`'s shape — not pairs).
     */
   def conversationDupPairs(
@@ -1079,49 +1055,45 @@ object Dedup {
   ): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val h = xxhash64(col(turnIdxCol), col(textCol))
     val sigAggs = (0 until numHashes).map(j => min(xxhash64(h, lit(j))).as(s"m$j"))
     val aggs = sigAggs ++ Seq(bit_xor(h).as("fp"),
       bit_xor(xxhash64(h, lit(graft.ops.TextStats.MultisetFp128Tag))).as("fp2"),
       count(lit(1)).as("n_turns"))
-    val sigs = turns.groupBy(col(convCol).as("id"))
-      .agg(aggs.head, aggs.tail: _*)
-      .persist(lvl)
     val sigArr = array((0 until numHashes).map(j => col(s"m$j")): _*)
-    val banded = sigs.select(col("id"), posexplode(
-        transform(sequence(lit(0), lit(bands - 1)),
-          b => hash(slice(sigArr, b * lit(r) + 1, lit(r))))).as(Seq("band", "band_hash")))
-      .repartition(bucketParts(turns), col("band"), col("band_hash"))
-      .persist(lvl)
-    guardHotKey(banded, Seq("band", "band_hash"), maxBucketFreq,
-      () => { sigs.unpersist(); banded.unpersist() }) { (key, freq) =>
-      s"conversationDupPairs: LSH bucket ($key) holds $freq conversations > " +
-        s"maxBucketFreq=$maxBucketFreq — a duplicate class this size has " +
-        "quadratic pair output. Use the linear multisetFingerprint keeper " +
-        "window (conv_dedup_fp shape) for exact classes, or raise " +
-        "maxBucketFreq deliberately."
+    Materialize.scoped(turns.groupBy(col(convCol).as("id"))
+        .agg(aggs.head, aggs.tail: _*)) { sigs =>
+      Materialize.scoped(sigs.select(col("id"), posexplode(
+          transform(sequence(lit(0), lit(bands - 1)),
+            b => hash(slice(sigArr, b * lit(r) + 1, lit(r))))).as(Seq("band", "band_hash")))
+          .repartition(bucketParts(turns), col("band"), col("band_hash"))) { banded =>
+        guardHotKey(banded, Seq("band", "band_hash"), maxBucketFreq) { (key, freq) =>
+          s"conversationDupPairs: LSH bucket ($key) holds $freq conversations > " +
+            s"maxBucketFreq=$maxBucketFreq — a duplicate class this size has " +
+            "quadratic pair output. Use the linear multisetFingerprint keeper " +
+            "window (conv_dedup_fp shape) for exact classes, or raise " +
+            "maxBucketFreq deliberately."
+        }
+        // r8: candidates via [[bucketPairs]] (guard above bounds the
+        // arrays); materialized eagerly — cand feeds the verify join's two
+        // probe sides, and a lazy persist races under AQE's concurrent
+        // stage submission
+        Materialize.scoped(bucketPairs(banded, Seq("band", "band_hash"), "id")
+            .distinct()) { cand =>
+          cand.count()
+          val keys = sigs.select(col("id"), col("fp"), col("fp2"), col("n_turns"))
+          cand
+            .join(keys.select(col("id").as("a"), col("fp").as("fp_a"),
+              col("fp2").as("fp2_a"), col("n_turns").as("n_a")), "a")
+            .join(keys.select(col("id").as("b"), col("fp").as("fp_b"),
+              col("fp2").as("fp2_b"), col("n_turns").as("n_b")), "b")
+            .where(col("fp_a") === col("fp_b") && col("fp2_a") === col("fp2_b") &&
+              col("n_a") === col("n_b"))
+            .select("a", "b")
+            .localCheckpoint()
+        }
+      }
     }
-    // r8: candidates via [[bucketPairs]] (guard above bounds the arrays);
-    // materialized eagerly — cand feeds the verify join's two probe sides,
-    // and a lazy persist races under AQE's concurrent stage submission
-    val cand = bucketPairs(banded, Seq("band", "band_hash"), "id")
-      .distinct()
-      .persist(lvl)
-    cand.count()
-    val keys = sigs.select(col("id"), col("fp"), col("fp2"), col("n_turns"))
-    val result = cand
-      .join(keys.select(col("id").as("a"), col("fp").as("fp_a"),
-        col("fp2").as("fp2_a"), col("n_turns").as("n_a")), "a")
-      .join(keys.select(col("id").as("b"), col("fp").as("fp_b"),
-        col("fp2").as("fp2_b"), col("n_turns").as("n_b")), "b")
-      .where(col("fp_a") === col("fp_b") && col("fp2_a") === col("fp2_b") &&
-        col("n_a") === col("n_b"))
-      .select("a", "b")
-      .persist(lvl)
-    result.count()
-    sigs.unpersist(); banded.unpersist(); cand.unpersist()
-    result
   }
 
   def simhashNearDups(
@@ -1200,10 +1172,10 @@ object Dedup {
         concat(lit("null#"), concat_ws("#", okNames.map(col): _*)))
         .as("norm_key")): _*)
       .select(col("norm_key"), struct(okNames.map(col): _*).as("ok"))
-      // r8: lazy persist — same rationale as keepersByKey (the normalize +
-      // sha2 chain otherwise re-evaluates on the probe side of the
-      // join-back when the class build side broadcasts)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // r8: lazy local checkpoint — same rationale as keepersByKey (the
+      // normalize + sha2 chain otherwise re-evaluates on the probe side of
+      // the join-back when the class build side broadcasts)
+      .localCheckpoint(false)
     val classes = keyed.groupBy("norm_key")
       .agg(count(lit(1)).as("n_copies"), min(col("ok")).as("keeper"))
     keyed.join(classes, "norm_key")

@@ -72,6 +72,10 @@ object Dsir {
     * upstream). Contributions are guarded into the int64-exact domain like
     * bm25 (a 100-TB corpus exceeds it → shard the histogram counts or
     * accept float, the error names both).
+    *
+    * Not pure plan construction: the per-doc profile is a lazy local
+    * checkpoint over an aggregation, and building it runs that exchange's
+    * map stage, so the call runs its first shuffle stage when called.
     */
   def importanceScores(
       corpus: DataFrame,
@@ -88,13 +92,13 @@ object Dsir {
       .select(col(idCol), explode(featureArray(col(textCol))).as("feat"))
       .select(col(idCol), featureBucket(col("feat"), nBuckets).as("bucket"))
       .groupBy(col(idCol), col("bucket")).agg(count(lit(1)).as("f"))
-      // r8: PERSIST the reduced profile — it feeds both the raw histogram
-      // and the scoring join, and measured plans showed the
+      // r8: materialize the reduced profile ONCE — it feeds both the raw
+      // histogram and the scoring join, and measured plans showed the
       // explode+sha256 chain executing once per consumer (exchange reuse
-      // did not fire across the two aggregation shapes). The cached frame
-      // is the already-reduced (id, bucket, f) rows; callers release via
-      // catalog.clearCache (the established persist contract).
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // did not fire across the two aggregation shapes). Lazy local
+      // checkpoint of the already-reduced (id, bucket, f) rows: it lives
+      // inside the returned plan.
+      .localCheckpoint(false)
     // raw histogram FROM the reduced per-doc profile (Σ f over docs), not a
     // second corpus scan: the 100-TB side is exploded + sha-hashed exactly
     // once, and the bucket rollup shuffles the already-reduced (id, bucket)

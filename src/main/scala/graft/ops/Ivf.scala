@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.Materialize
 
 /** IVF (inverted-file) approximate nearest neighbor — the k-means-bucketed
   * scale path beside the LSH one ([[Similarity.lshTopK]]):
@@ -63,11 +64,7 @@ object Ivf {
         "driver-bounded-collect contract: cap × dim doubles)")
     val full = corpus.select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("vec"))
-    val base =
-      if (sampleCap <= 0) full
-      else full.orderBy(xxhash64(col("id"), lit(seed)), col("id")).limit(sampleCap)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    def lloyd(base: DataFrame): Array[Array[Double]] = {
       // seeded init: k hash-smallest vectors (deterministic, one pass +
       // top-k), or deterministic farthest-point (maximin — the kmeans++
       // idea with argmax instead of D²-sampling, so no RNG state): start
@@ -124,7 +121,10 @@ object Ivf {
         it += 1
       }
       centroids
-    } finally if (sampleCap > 0) base.unpersist()
+    }
+    if (sampleCap <= 0) lloyd(full)
+    else Materialize.scoped(
+      full.orderBy(xxhash64(col("id"), lit(seed)), col("id")).limit(sampleCap))(lloyd)
   }
 
   /** (id, cid, vec) — the indexed corpus; persist/bucket by cid at scale. */

@@ -94,12 +94,19 @@ object Retrieval {
       k: Int = 5,
       idCol: String = "doc_id",
       textCol: String = "text",
-      buckets: Int = 64,
-      maxDfFrac: Double = 1.0,
-      safeBound: Double = 9.2e18
-  ): DataFrame = {
-    require(k > 0 && buckets > 0, s"k and buckets must be positive, got k=$k buckets=$buckets")
-    require(maxDfFrac > 0.0 && maxDfFrac <= 1.0, s"maxDfFrac must be in (0, 1], got $maxDfFrac")
+      buckets: Int = Bm25Buckets,
+      maxDfFrac: Double = Bm25MaxDfFrac,
+      safeBound: Double = Bm25SafeBound
+  ): DataFrame =
+    topKOver(postings(corpus, idCol, textCol), queries, k, buckets, maxDfFrac, safeBound)
+
+  /** The reduced BM25 postings `(doc_id, term, tf, dl)` — ≤ one row per
+    * (doc, distinct term), never the corpus text — as an eager local
+    * checkpoint, so every consumer ([[bm25TopK]]'s df/stats/scoring
+    * branches, and [[prfExpandedTopK]]'s two passes plus its term mining)
+    * reads ONE tokenization of the corpus.
+    */
+  private def postings(corpus: DataFrame, idCol: String, textCol: String): DataFrame = {
     // r8 (the VERDICT-r7 dl blemish, guide §2.4): dl — the doc's token
     // count — is a per-row scan-stage column (count of non-empty split
     // tokens), NOT a corpus-wide aggregation joined back on doc_id. It
@@ -120,12 +127,28 @@ object Retrieval {
     // the scan+tokenize+partial-agg subtree once per consumer FLAVOR:
     // column pruning gave the df branch a narrower partial aggregate than
     // the scoring branch (and the stats branch a third), so exchange reuse
-    // never fired and the corpus was tokenized 2-3x per query. tf is the
-    // reduced postings form (≤ one row per (doc, distinct term)), never
-    // the corpus text — the buildPostings shape.
-    val tf = tokens.groupBy("doc_id", "term")
+    // never fired and the corpus was tokenized 2-3x per query.
+    tokens.groupBy("doc_id", "term")
       .agg(count(lit(1)).as("tf"), first("dl").as("dl"))
       .localCheckpoint(true)
+  }
+
+  // bm25TopK's tuning defaults; prfExpandedTopK's two passes run with them
+  private val Bm25Buckets = 64
+  private val Bm25MaxDfFrac = 1.0
+  private val Bm25SafeBound = 9.2e18
+
+  /** [[bm25TopK]] over prebuilt [[postings]]. */
+  private def topKOver(
+      tf: DataFrame,
+      queries: DataFrame,
+      k: Int,
+      buckets: Int,
+      maxDfFrac: Double,
+      safeBound: Double
+  ): DataFrame = {
+    require(k > 0 && buckets > 0, s"k and buckets must be positive, got k=$k buckets=$buckets")
+    require(maxDfFrac > 0.0 && maxDfFrac <= 1.0, s"maxDfFrac must be in (0, 1], got $maxDfFrac")
     // one-row corpus stats carried as a broadcast literal frame (no driver
     // action; the SQL twin is a CROSS JOIN on a count(*) CTE): s_tokens =
     // ΣΣtf and n_docs = docs holding ≥1 distinct term are by definition of
@@ -251,10 +274,10 @@ object Retrieval {
     *     that are NOT already query terms join the query;
     *  4. second pass: [[bm25TopK]] with the expanded queries → final top-k.
     *
-    * Scale shape: the feedback frame is queries × kFeedback rows
-    * (broadcast); term mining joins it against the corpus tf table —
-    * everything query-side stays bounded, the corpus never shuffles beyond
-    * the two bm25 passes themselves.
+    * Scale shape: the corpus is tokenized ONCE into [[postings]], which
+    * feed both passes and the term mining. The feedback frame is queries ×
+    * kFeedback rows (broadcast); term mining joins it against the postings
+    * (their `tf` and `dl` columns) — everything query-side stays bounded.
     */
   def prfExpandedTopK(
       corpus: DataFrame,
@@ -267,17 +290,12 @@ object Retrieval {
   ): DataFrame = {
     require(kFeedback > 0 && mExpansion >= 0 && k > 0,
       s"need kFeedback > 0, mExpansion >= 0, k > 0; got $kFeedback/$mExpansion/$k")
-    val fb = bm25TopK(corpus, queries, k = kFeedback, idCol = idCol,
-        textCol = textCol)
-      .select(col("q_id"), col(idCol), col("score"))
-    val tf = corpus
-      .select(col(idCol), explode(split(lower(trim(col(textCol))), "\\s+")).as("term"))
-      .where(col("term") =!= "")
-      .groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
-    val dl = tf.groupBy(col(idCol)).agg(sum("tf").as("dl"))
-    val cand = tf.join(dl, Seq(idCol)).join(broadcast(fb), Seq(idCol))
+    val p = postings(corpus, idCol, textCol)
+    val fb = topKOver(p, queries, kFeedback, Bm25Buckets, Bm25MaxDfFrac, Bm25SafeBound)
+      .select(col("q_id"), col("doc_id"), col("score"))
+    val cand = p.join(broadcast(fb), Seq("doc_id"))
       .select(col("q_id"), col("term"),
-        struct(col(idCol).as("d"),
+        struct(col("doc_id").as("d"),
           ((col("tf").cast("double") / col("dl").cast("double")) * col("score"))
             .as("contrib")).as("c"))
       .groupBy("q_id", "term")
@@ -291,8 +309,8 @@ object Retrieval {
         Window.partitionBy("q_id").orderBy(desc("w"), asc("term"))))
       .where(col("xrank") <= mExpansion)
       .select("q_id", "term")
-    bm25TopK(corpus, queries.select("q_id", "term").unionByName(expansion),
-      k = k, idCol = idCol, textCol = textCol)
+    topKOver(p, queries.select("q_id", "term").unionByName(expansion), k,
+      Bm25Buckets, Bm25MaxDfFrac, Bm25SafeBound)
   }
 
   /** lcm(1..k) — the common denominator that turns a reciprocal-rank SUM

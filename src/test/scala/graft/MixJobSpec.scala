@@ -23,11 +23,13 @@ class MixJobSpec extends AnyFunSuite {
     writeJsonl(s"$dir/a.jsonl", 1, 10)
     writeJsonl(s"$dir/b.jsonl", 2, 12)
 
+    spark.catalog.clearCache()
     val manifest = MixJob.run(spark,
       Seq(MixJob.SourceSpec("a", s"$dir/a.jsonl"),
         MixJob.SourceSpec("b", s"$dir/b.jsonl", maxExamples = 7)),
       s"$dir/out", "mixed", "train", shuffle = true, seed = 42)
     assert(manifest("count") == 17L)
+    assert(SparkTestBase.cacheIsEmpty, "MixJob.run left its source cache behind")
     assert(manifest("order") == "python_shuffle")
 
     val written = spark.read.json(s"$dir/out/dataset").collect()

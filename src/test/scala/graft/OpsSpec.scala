@@ -520,11 +520,9 @@ class OpsSpec extends AnyFunSuite {
     val bloom = Dedup.contaminatedSpansBloom(corpus, benchmark, k = 8,
       expectedRefWindows = 100000L, fpp = 0.01)
     assert(spanSet(bloom) == exact)
-    bloom.unpersist()
     val saturated = Dedup.contaminatedSpansBloom(corpus, benchmark, k = 8,
       expectedRefWindows = 1L, fpp = 0.5)
     assert(spanSet(saturated) == exact)
-    saturated.unpersist()
     intercept[IllegalArgumentException](
       Dedup.contaminatedSpansBloom(corpus, benchmark, fpp = 1.5))
   }
@@ -546,21 +544,83 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("dedup/ANN library calls honor the documented eager-materialization contract") {
-    // documented: the returned frame is persisted + already materialized;
-    // the caller owns its unpersist. Assert the storage level is set.
-    val pairs = Dedup.minhashNearDups(planted, threshold = 0.5)
-    assert(pairs.storageLevel.useMemory || pairs.storageLevel.useDisk,
-      "minhashNearDups result must come back persisted per its contract")
-    pairs.unpersist()
+    // documented: no call leaves a cache behind. Ops that run actions
+    // return an already-materialized local checkpoint; lazy ops keep their
+    // shared frames as lazy checkpoints inside the returned plan. Either
+    // way the session's cache manager stays empty after an action.
+    import graft.metrics.{Metrics, QualityReport}
+    import graft.ops.{Dsir, Ivf, UrlOps, WebClean}
+    spark.catalog.clearCache() // planted and earlier tests' own caches
+    def checkpointed(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.analyzed match {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.isCheckpointed
+        case _ => false
+      }
+    def noCacheAfter(name: String)(action: => Any): Unit = {
+      action
+      assert(SparkTestBase.cacheIsEmpty, s"$name left a cached plan behind")
+    }
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val knn = Similarity.lshTopK(emb, k = 3, bits = 4, tables = 4)
-    assert(knn.storageLevel.useMemory || knn.storageLevel.useDisk,
-      "lshTopK result must come back persisted per its contract")
-    knn.unpersist()
-    val spans = Dedup.duplicatedWindowSpans(planted, k = 8)
-    assert(spans.storageLevel.useMemory || spans.storageLevel.useDisk,
-      "duplicatedWindowSpans result must come back persisted per its contract")
-    spans.unpersist()
+    val centroids = Ivf.train(emb, k = 4, iters = 1, sampleCap = 64)
+    assert(SparkTestBase.cacheIsEmpty, "Ivf.train left its sample cached")
+    val turns = Seq(("a", 0, "hello there"), ("a", 1, "bye"),
+      ("b", 0, "hello there"), ("b", 1, "bye")).toDF("conv_id", "turn_idx", "text")
+    val eager = Seq(
+      "minhashNearDups" -> Dedup.minhashNearDups(planted, threshold = 0.5),
+      "simhashExactDups" -> Dedup.simhashExactDups(planted),
+      "conversationDupPairs" -> Dedup.conversationDupPairs(turns),
+      "duplicatedWindowSpans" -> Dedup.duplicatedWindowSpans(planted, k = 8),
+      "contaminatedSpansBloom" -> Dedup.contaminatedSpansBloom(planted,
+        planted.where($"doc_id" % 7 === 3), k = 8),
+      "lshTopK" -> Similarity.lshTopK(emb, k = 3, bits = 4, tables = 4),
+      "cosineNearDups" -> Similarity.cosineNearDups(emb, threshold = 0.9, bits = 4, tables = 4),
+      "semanticNearDups" -> Similarity.semanticNearDups(emb,
+        centroids.map(_.toSeq).toSeq, threshold = 0.9),
+      "semanticNearDups(sub-split)" -> Similarity.semanticNearDups(emb,
+        centroids.map(_.toSeq).toSeq, threshold = 0.9, maxClusterSize = 10))
+    eager.foreach { case (name, df) =>
+      assert(checkpointed(df), s"$name result must come back materialized")
+      noCacheAfter(name)(df.count())
+    }
+    val lens = docs.select($"source", length($"text").as("len"))
+    noCacheAfter("exactQuantilesBisect")(
+      Metrics.exactQuantilesBisect(lens, "len").collect())
+    noCacheAfter("groupedQuantilesBisect")(
+      Metrics.groupedQuantilesBisect(lens, "source", "len").collect())
+    noCacheAfter("groupedKthSmallest")(
+      Metrics.groupedKthSmallest(lens, "source", "len", (_, n) => n / 2).collect())
+    noCacheAfter("heavyHittersExact")(TextStats.heavyHittersExact(
+      Seq("a", "a", "a", "b", "b", "c").toDF("tok"), k = 2, counters = 8).collect())
+    val lazyOps = Seq(
+      "exact" -> Dedup.exact(planted),
+      "ccnetDedup" -> Dedup.ccnetDedup(planted, Seq("doc_id" -> $"doc_id")),
+      "sentenceSpanDedup" -> WebClean.sentenceSpanDedup(planted),
+      "importanceScores" -> Dsir.importanceScores(planted,
+        planted.where($"doc_id" % 10 === 0), nBuckets = 1024),
+      "repetitionSignalsFull" -> TextStats.repetitionSignalsFull(planted),
+      "domainCapExact" -> UrlOps.domainCapExact(
+        docs.select($"doc_id", $"source".as("domain")), "domain", cap = 10))
+    lazyOps.foreach { case (name, df) => noCacheAfter(name)(df.count()) }
+    val report = QualityReport.analyze(spark, Seq(("call 0912345678", 5, 15))
+      .toDF("text", "s", "e")
+      .select($"text", array(struct(lit("PHONE").as("typ"), $"s".as("start"),
+        $"e".as("end"), lit("0912345678").as("text"))).as("entities")))
+    noCacheAfter("QualityReport.analyze") {
+      report.summary.collect(); report.entitySpanLength.collect()
+    }
+  }
+
+  test("hot-key guard throws release every cache of the call") {
+    spark.catalog.clearCache()
+    val hot = (1L to 6L).map(i => (i, "identical text body here")).toDF("doc_id", "text")
+    intercept[IllegalStateException](Dedup.minhashNearDups(hot, maxBucketFreq = 1))
+    assert(SparkTestBase.cacheIsEmpty, "minhashNearDups guard throw leaked its band cache")
+    intercept[IllegalStateException](Dedup.simhashExactDups(hot, maxSigFreq = 1))
+    assert(SparkTestBase.cacheIsEmpty, "simhashExactDups guard throw leaked its signature cache")
+    val many = (1 to 4).flatMap(i =>
+      Seq((s"x$i", 0, "same"), (s"x$i", 1, "conv"))).toDF("conv_id", "turn_idx", "text")
+    intercept[IllegalStateException](Dedup.conversationDupPairs(many, maxBucketFreq = 1))
+    assert(SparkTestBase.cacheIsEmpty, "conversationDupPairs guard throw leaked its caches")
   }
 
   test("hyperplane components are Gaussian (moments), deterministic by seed") {
@@ -696,7 +756,6 @@ class OpsSpec extends AnyFunSuite {
     val got = Similarity.semanticNearDups(df, centroids, threshold = 0.9,
       maxClusterSize = cap)
     val pairs = got.select($"a", $"b").as[(Long, Long)].collect().toSet
-    got.unpersist() // eager-materialization contract
     val want = twins.map { case (tid, _) => ((tid - 1000) / 13 * 13L, tid) }.toSet
     assert(pairs == want, s"missing=${want.diff(pairs)} extra=${pairs.diff(want)}")
 
@@ -898,7 +957,6 @@ class OpsSpec extends AnyFunSuite {
     val pairs = Dedup.simhashExactDups(planted)
     val comps = Dedup.connectedComponents(pairs, planted.select("doc_id"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    pairs.unpersist()
     val keepers = Dedup.multisetKeepers(planted)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("keeper_id")).toMap
     assert(keepers == comps)
@@ -908,7 +966,6 @@ class OpsSpec extends AnyFunSuite {
     val pairs = Dedup.minhashNearDups(planted, threshold = 1.0)
     val comps = Dedup.connectedComponents(pairs, planted.select("doc_id"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    pairs.unpersist()
     val keepers = Dedup.shingleSetKeepers(planted)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("keeper_id")).toMap
     assert(keepers == comps)
@@ -1236,7 +1293,6 @@ class OpsSpec extends AnyFunSuite {
     val pairs = Dedup.simhashExactDups(d)
     val comps = Dedup.connectedComponents(pairs, d.select("doc_id"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    pairs.unpersist()
     val keepers = Dedup.multisetKeepers(d)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("keeper_id")).toMap
     assert(keepers == comps)
@@ -1300,7 +1356,6 @@ class OpsSpec extends AnyFunSuite {
     ).toDF("conv_id", "turn_idx", "text")
     val pairs = Dedup.conversationDupPairs(t)
     val got = pairs.collect().map(r => (r.getString(0), r.getString(1))).toSet
-    pairs.unpersist()
     // a==a2 exactly; b differs in ONE turn (turn-fp Jaccard 2/4) and must
     // NOT pair at the exact regime; c is unrelated
     assert(got == Set(("a", "a2")), got)

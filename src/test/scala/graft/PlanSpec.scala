@@ -2,6 +2,7 @@ package graft
 
 import graft.ops.Similarity
 import graft.pipeline.{Deid, TurnsGen}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,6 +16,45 @@ class PlanSpec extends AnyFunSuite {
 
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  /** (action name, executed plan) of every query `body` runs, in order —
+    * the plans of the jobs a library call runs internally (its guards,
+    * counts and checkpoints), which its returned plan no longer shows.
+    */
+  private def executedPlans(body: => Any): Seq[(String, SparkPlan)] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(name: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = seen.add(name -> qe.executedPlan)
+      def onFailure(name: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.sql.graftshim.Bridge.waitListeners(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
+
+  private def assertNoCartesian(plans: Seq[(String, SparkPlan)]): Unit =
+    plans.foreach { case (name, p) =>
+      val s = p.toString
+      assert(!s.contains("CartesianProduct") && !s.contains("BroadcastNestedLoopJoin"),
+        s"$name:\n$s")
+    }
+
+  private object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** The nodes `p` itself executes, through adaptive query stages: an
+    * InMemoryTableScan is a leaf, so the plan a scoped cache holds is not
+    * counted as work of every job that reads the cache.
+    */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = Aqe.collect(p) { case n => n }
+
+  private def runs(p: SparkPlan, exprName: String): Boolean =
+    nodes(p).exists(_.expressions.exists(_.toString.contains(exprName)))
 
   test("filter + projection push down to the parquet scan") {
     val dir = java.nio.file.Files.createTempDirectory("graft_plan").toString
@@ -100,14 +140,23 @@ class PlanSpec extends AnyFunSuite {
 
   test("dedup/ANN jobs shuffle on bucket keys only (no cartesian)") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val p = plan(Similarity.lshTopK(emb, k = 3, bits = 4, tables = 4))
-    assert(!p.contains("CartesianProduct"), p)
+    val pl = executedPlans(Similarity.lshTopK(emb, k = 3, bits = 4, tables = 4))
+    assert(pl.map(_._1).contains("localCheckpoint"), pl)
+    assertNoCartesian(pl)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val pm = plan(graft.ops.Dedup.minhashNearDups(docs, threshold = 0.5))
-    assert(!pm.contains("CartesianProduct"), pm)
-    // both sides of the banded self-join read the PERSISTED narrow frame —
-    // signatures compute once
-    assert(pm.contains("InMemoryTableScan"), pm)
+    val pm = executedPlans(graft.ops.Dedup.minhashNearDups(docs, threshold = 0.5))
+    assertNoCartesian(pm)
+    // every job of the call (hot-bucket guard, candidate and shingle
+    // fills, verify checkpoint) reads the bands through the scoped cache —
+    // signatures compute once, inside the cache fill
+    assert(pm.size == 4 && pm.forall { case (_, p) =>
+      nodes(p).exists(_.nodeName == "InMemoryTableScan") && !runs(p, "graft_minhash_sig")
+    }, pm.mkString("\n"))
+    // both sides of the verify join read the cached shingle frame
+    val verify = pm.collect { case ("localCheckpoint", p) => p }
+    assert(verify.size == 1 && nodes(verify.head).count(n =>
+      n.nodeName == "InMemoryTableScan" && n.output.exists(_.name.startsWith("sh_"))) == 2,
+      verify)
     val centroids = graft.ops.Ivf.train(emb, k = 8, iters = 1)
     val pi = plan(graft.ops.Ivf.topK(emb, emb.limit(5), centroids, k = 3, nprobe = 2))
     assert(!pi.contains("CartesianProduct"), pi)
@@ -267,13 +316,16 @@ class PlanSpec extends AnyFunSuite {
 
   test("sentence-span dedup: digest-keyed joins only — no cartesian, doc-local window only") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val p = plan(graft.ops.WebClean.sentenceSpanDedup(docs.select("doc_id", "text")))
-    assert(!p.contains("CartesianProduct"), p)
-    assert(!p.contains("BroadcastNestedLoopJoin"), p)
-    // the (id, idx, digest) span frame feeds both the owner agg and the
-    // loser probe — the persist must make the sentence explode + doc-local
-    // lead window a shared scan, not a double execution
-    assert(p.contains("InMemoryTableScan"), p)
+    val ps = executedPlans(graft.ops.WebClean.sentenceSpanDedup(docs.select("doc_id", "text"))
+      .write.format("noop").mode("overwrite").save())
+    assertNoCartesian(ps)
+    // the sentence and (id, idx, digest) span frames each feed two
+    // consumers — their checkpoints make the sentence explode and the
+    // doc-local lead window run in ONE job each, not once per consumer
+    val windows = ps.flatMap { case (_, p) => nodes(p).filter(_.nodeName == "Window") }
+    assert(windows.size == 1, ps.mkString("\n"))
+    assert(windows.head.toString.contains("doc_id"), windows.head)
+    assert(ps.count { case (_, p) => runs(p, "posexplode") } == 1, ps.mkString("\n"))
   }
 
   test("round-7 fourth half: URL keepers window-free; DSIR broadcasts histograms, one (id,bucket) agg exchange") {
@@ -296,11 +348,31 @@ class PlanSpec extends AnyFunSuite {
     // corpus side shuffles ONLY on (id, bucket) — no window, no cartesian
     // beyond the one-row totals crossJoin (an explicit broadcast)
     val target = docs.select("doc_id", "text").where(col("doc_id") % 10 === 0)
-    val ps = plan(graft.ops.Dsir.importanceScores(
-      docs.select("doc_id", "text"), target, nBuckets = 1024))
+    val dsir = executedPlans(graft.ops.Dsir.importanceScores(
+        docs.select("doc_id", "text"), target, nBuckets = 1024)
+      .write.format("noop").mode("overwrite").save())
+    val ps = dsir.map(_._2.toString).mkString("\n")
     assert(!ps.contains("Window"), ps)
     assert(!ps.contains("CartesianProduct"), ps)
     assert(ps.contains("BroadcastHashJoin") || ps.contains("BroadcastExchange"), ps)
+    // the corpus profile is checkpointed: the feature explode over the
+    // corpus (the scan without the target's `% 10` filter) runs in one job,
+    // never once per profile consumer
+    assert(dsir.map { case (_, p) => nodes(p).count(n =>
+      n.nodeName == "Generate" && !n.toString.contains("% 10")) }.sum == 1, ps)
+  }
+
+  test("DistributeExpensive gate: one Repartition just under 1 GiB, none just over") {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
+    import org.apache.spark.sql.catalyst.plans.logical.{Project, Repartition}
+    val pdf = AttributeReference("pdf", org.apache.spark.sql.types.BinaryType)()
+    def repartitions(bytes: BigInt): Int =
+      graft.plans.DistributeExpensiveProjections(spark)(Project(
+          Seq(Alias(graft.functions.PdfTextExpr(pdf), "t")()), SizedLeaf(Seq(pdf), bytes)))
+        .collect { case r: Repartition => r }.size
+    val gib = BigInt(1L << 30)
+    assert(repartitions(gib - 1) == 1)
+    assert(repartitions(gib + 1) == 0)
   }
 
   test("connected components shuffles on the id key only (no cartesian)") {
@@ -312,4 +384,12 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
   }
+}
+
+/** A leaf that reports a fixed `sizeInBytes`, to drive size gates. */
+private case class SizedLeaf(
+    output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute], bytes: BigInt)
+    extends org.apache.spark.sql.catalyst.plans.logical.LeafNode {
+  override def computeStats(): org.apache.spark.sql.catalyst.plans.logical.Statistics =
+    org.apache.spark.sql.catalyst.plans.logical.Statistics(sizeInBytes = bytes)
 }

@@ -88,8 +88,10 @@ class SensitiveDataGenSpec extends AnyFunSuite {
   test("distributed dataset factory: files + structured outputs + manifest") {
     val spark = SparkTestBase.spark
     val dir = java.nio.file.Files.createTempDirectory("graft_synth_corpus").toString
+    spark.catalog.clearCache()
     val manifest = graft.training.SyntheticCorpusJob.run(spark, dir, n = 12)
     assert(manifest.count() == 12)
+    assert(SparkTestBase.cacheIsEmpty, "SyntheticCorpusJob.run left its item cache behind")
     // per-document text + pdf files exist and carry the document text
     val txt = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$dir/text/generated_document_3.txt")), "UTF-8")

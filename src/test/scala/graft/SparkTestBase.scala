@@ -16,4 +16,7 @@ object SparkTestBase {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** True when the session's cache manager holds no cached plan. */
+  def cacheIsEmpty: Boolean = spark.sharedState.cacheManager.isEmpty
 }

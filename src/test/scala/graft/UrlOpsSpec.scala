@@ -219,6 +219,25 @@ class UrlOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("domainCapExact: forced bisection branch equals the single-aggregation branch") {
+    // smallGroupMax = 0 sends every domain (null class included) down the
+    // counting-bisection path; it must pick the same rows as the default
+    // in-group threshold path, ties at the threshold included
+    val docs = ((0L until 40L).map(i => (i, "big.com")) ++
+      (100L until 103L).map(i => (i, "tiny.net")) ++
+      (200L until 230L).map(i => (i, null.asInstanceOf[String])) ++
+      (0L until 12L).map(j => (7L + j * 1048573L, "ties.org")))
+      .toDF("doc_id", "domain")
+    def decisions(smallGroupMax: Long) =
+      UrlOps.domainCapExact(docs, "domain", cap = 10, smallGroupMax = smallGroupMax)
+        .select("doc_id", "domain", "n_domain", "keep").collect()
+        .map(r => (r.getLong(0), Option(r.getString(1)), r.getLong(2), r.getBoolean(3)))
+        .sortBy(_._1).toSeq
+    val single = decisions(1L << 20)
+    assert(single.length == docs.count())
+    assert(decisions(0L) == single)
+  }
+
   test("plan shape: canonicalize+domain is a zero-exchange scan-stage projection") {
     val plan = Seq(Tuple1("https://a.io/p")).toDF("u")
       .select(UrlOps.canonicalizeUrl(col("u")).as("c"))
